@@ -12,7 +12,7 @@ Timings are reported RAW and NORMALIZED: round VMs vary 2-4x in Spark
 fixed costs, so each run measures two fixed-work probes (a JVM-side
 aggregate and a pandas-UDF job) and scales each entry by its FAMILY's
 ratio to the FIXED round-5 reference probe (REF_CALIBRATION):
-pandas-UDF-dominated entries (PANDAS_FAMILY) by the pandas probe,
+pandas-UDF-dominated entries (registry ``pandas`` flag) by the pandas probe,
 codegen entries by the JVM probe — normalized numbers compare across
 rounds; raw numbers describe this VM.
 
@@ -55,39 +55,10 @@ RUN_MATRIX = os.environ.get("SPARK_GRAFT_MATRIX", "1") != "0"
 #: NEVER change, or normalized numbers stop being comparable.
 REF_CALIBRATION = {"jvm_agg_ms": 159.8, "pandas_udf_job_ms": 395.0}
 
-#: Entries whose wall-clock is dominated by pandas-UDF / Arrow-batched
-#: stages (GP fits: per-expert numpy reductions; ANN entries that ENCODE or
-#: bucket per invocation: _sq_dists/_encode/_bucket pandas UDFs; the GPC
-#: capstone: fit + transform).  These normalize by the pandas probe ratio;
-#: everything else — codegen scans/joins/aggregates — by the JVM ratio.
-#: ivfadc_topk_codes is deliberately NOT here: its plan has zero Python
-#: nodes (the encode is amortized into the persisted codes relation).
-PANDAS_FAMILY = {
-    "gp_fit_100k",
-    "gpc_fit_2k",
-    "corpus_prep_gpc_filter",
-    "gpc_uncertainty_sample",
-    "ivf_topk",
-    "ivf_topk_auto",
-    "semdedup_keep",
-    "pq_topk",
-    "pq_topk_auto",
-    "opq_topk_auto",
-    "lsh_topk_multiprobe",
-    "opq_topk",
-    "ivfadc_topk",
-    "ivfadc_topk_auto",
-    "lsh_topk",
-    "embedding_neardup_pairs",
-    "hard_negatives_planted",
-    "cluster_balance_sample",
-    "cluster_exemplars",
-    "jl_project",
-    # r13: the edit-distance verify moved to a mapInArrow Myers kernel —
-    # measured split at sf0.1: 4.4 s of the 5.2 s entry is the Arrow
-    # boundary crossing + kernel, so the pandas probe is now its family
-    "editdist_screen",
-}
+#: Bench-only GP fit entries (timed below, not registry queries); both are
+#: pandas-UDF dominated, so they normalize by the pandas probe like the
+#: registry entries declared with ``pandas=True``.
+BENCH_ONLY_PANDAS = ("gp_fit_100k", "gpc_fit_2k")
 
 
 def make_spark():
@@ -306,133 +277,30 @@ def greedy_provider_bench(spark) -> dict:
     return out
 
 
-def main() -> None:
-    spark = make_spark()
-    spark.sparkContext.setLogLevel("ERROR")
+def warm_up(spark, sf_dir: str, ann: bool = True):
+    """Untimed session warm-up shared by this bench and tools/time_query.py;
+    returns the pandas UDF it warmed (the calibration probe reuses it).
 
-    from spark_gp_spark.queries import QUERIES
+    The first job in a fresh JVM pays parquet reader/codegen/shuffle-service
+    init (~5 s measured on q1, vs 2.4 s for a COLDER but later 5-table
+    join), and the first Arrow/pandas-UDF stage pays Python-worker spawn
+    (~8 s for 32 workers importing numpy).  Warming both makes every timed
+    number a steady-state plan cost instead of charging process startup to
+    whichever query happens to run first.
 
-    bench_queries = [
-        "q1_pricing_summary",
-        "revenue_by_nation",
-        "revenue_rollup",
-        "part_type_revenue",
-        "text_stats",
-        "gopher_quality_rules",
-        "quality_rule_rates",
-        "temperature_mix",
-        "embedding_dim_stats",
-        "tfidf_top_terms",
-        "doc_fingerprints",
-        "doc_repetition",
-        "doc_logprob",
-        "dup_ngram_fraction",
-        "token_pmi_pairs",
-        "tfidf_cosine_pairs",
-        "bm25_topk",
-        # r11: the planted twin replaced the vacuous original in the
-        # registry; same verb + a deterministic planted mutation, so the
-        # timing remains comparable across rounds
-        "exact_dedup_planted",
-        "shard_export_manifest",
-        "dedup_span_clean",
-        "repetition_clean",
-        "domain_mix_sample",
-        "token_budget_fill",
-        "pack_sequences",
-        "dsir_select",
-        "semdedup_keep",
-        "minhash_lsh_pairs",
-        "ngram_jaccard_pairs",
-        "neardup_components",
-        "dedup_incremental",
-        "neardup_incremental",
-        # --- new in r10 ---
-        "containment_screen",
-        "editdist_screen",
-        "dedup_normalized",
-        "split_leakage",
-        "corpus_diff",
-        "incremental_refresh",
-        "corpus_prep_pipeline",
-        "corpus_prep_pipeline_v2",
-        "corpus_prep_gpc_filter",
-        "gpc_uncertainty_sample",
-        "simhash_pairs",
-        "cosine_topk",
-        "lsh_topk",
-        "lsh_topk_multiprobe",
-        "ivf_topk",
-        "ivf_topk_auto",
-        "pq_topk",
-        "pq_topk_auto",
-        "opq_topk",
-        "opq_topk_auto",
-        "ivfadc_topk",
-        "ivfadc_topk_codes",
-        "ivfadc_topk_auto",
-        "embedding_neardup_pairs",
-        "hard_negatives_planted",
-        "cluster_balance_sample",
-        "cluster_exemplars",
-        "embedding_whiten",
-        "embedding_drift",
-        "jl_project",
-        "embedding_quantize",
-        "asof_purchases_views",
-        "event_status_asof",
-        "event_pair_interval_join",
-        "event_gap_fill",
-        "orders_dq_report",
-        "session_stats",
-        "session_funnel",
-        "event_window_agg",
-        "event_distinct_users_salted",
-        "order_segment_revenue_salted",
-        "orders_upsert_merge",
-        "bucketed_join_roundtrip",
-        "streaming_window_counts",
-        "streaming_window_counts_append",
-        "streaming_interval_join",
-        "streaming_token_budget",
-        "streaming_embedding_drift",
-        "streaming_neardup_expiry",
-        # --- new in r10: the closed-window heavy hitters ---
-        "streaming_trending_terms",
-        # --- r11 (VERDICT r10 next #3): the bounded-horizon join variant
-        # REPLACES the unbounded twin in the timed suite — the twin stays
-        # registered (correctness-only) as the analytics-replay shape, but
-        # its ~18 s re-measured a documented losing experiment; the bounded
-        # variant is the production shape (evictable JVM state) ---
-        "streaming_neardup_join_bounded",
-        # --- registered in r11 (the r10-staged wave, graduated from
-        # staged_times into the headline; ~26 s total at sf0.1 in the r10
-        # staging measurements) ---
-        "vocab_coverage_report",
-        "streaming_ingest_dedup",
-        "multimodal_media_dedup",
-        "dedup_keep_first_planted",
-        "redact_pii_planted",
-        "perplexity_buckets",
-        "ann_recall_report",
-        "neardup_threshold_sweep",
-        "bpe_merge_candidates",
-        "source_overlap_matrix",
-        "band_skew_report",
-        "quality_calibration_bins",
-        "vocab_growth_curve",
-        "streaming_vocab_drift",
-    ]
-
-    # Untimed session warm-up: the first job in a fresh JVM pays parquet
-    # reader/codegen/shuffle-service init (~5 s measured on q1, vs 2.4 s for
-    # a COLDER but later 5-table join), and the first Arrow/pandas-UDF stage
-    # pays Python-worker spawn (~8 s for 32 workers importing numpy).
-    # Warming both makes every timed number a steady-state plan cost instead
-    # of charging process startup to whichever query happens to run first.
-    QUERIES[bench_queries[0]](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+    With ``ann``, the ANN artifacts are trained too: index training is
+    train-once by design (process artifact cache + operators/ann_index.py
+    persistence), and a production pipeline queries a PRE-TRAINED index
+    over pre-encoded codes, so the timed ivf/pq/opq/ivfadc entries are pure
+    scan+plan cost.  The trainer calls mirror the registry entries exactly
+    so the cache keys match.
+    """
     from pyspark.sql import functions as F
     from pyspark.sql.types import DoubleType
+
+    from spark_gp_spark.queries import q1_pricing_summary
+
+    q1_pricing_summary(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
     @F.pandas_udf(DoubleType())
     def _warm(v):
@@ -441,14 +309,16 @@ def main() -> None:
     spark.range(10_000).repartition(int(CPUS)).select(
         _warm(F.col("id").cast("double")).alias("x")
     ).agg({"x": "sum"}).collect()
+    if not ann:
+        return _warm
 
-    # ANN index training is train-once by design (process artifact cache +
-    # operators/ann_index.py persistence) — a production pipeline queries a
-    # PRE-TRAINED index, so the trainers are warmed here, outside the timed
-    # region, exactly like the JVM/Python-worker warmups above.  The timed
-    # ivf/pq/ivfadc entries are then pure scan+plan cost.
-    from spark_gp_spark.operators.ivf import train_centroids_from_parquet
+    from spark_gp_spark.operators.ivf import (
+        auto_ivf_params,
+        parquet_num_rows,
+        train_centroids_from_parquet,
+    )
     from spark_gp_spark.operators.pq import (
+        auto_pq_params,
         read_query_vectors,
         train_opq_from_parquet,
         train_pq_codebooks_from_parquet,
@@ -457,34 +327,19 @@ def main() -> None:
     from spark_gp_spark.queries import (
         _IVF_K, _IVF_SAMPLE, _IVF_SEED, _OPQ_ITERS,
         _PQ_K, _PQ_M, _PQ_SAMPLE, _PQ_SEED,
+        ensure_ann_codes,
     )
 
-    emb_path = f"{SF_DIR}/embeddings.parquet"
+    emb_path = f"{sf_dir}/embeddings.parquet"
+    # frozen parameters: ivf_topk, pq_topk, ivfadc_topk, opq_topk
     cents = train_centroids_from_parquet(emb_path, _IVF_K, _IVF_SEED, _IVF_SAMPLE)
     train_pq_codebooks_from_parquet(emb_path, _PQ_M, _PQ_K, _PQ_SEED, _PQ_SAMPLE)
     train_pq_codebooks_residual_from_parquet(
         emb_path, cents, _PQ_M, _PQ_K, _PQ_SEED, _PQ_SAMPLE
     )
-    # OPQ trains once too (~2 s of driver-side SVD/k-means at sf0.1): warm
-    # it here so the timed opq_topk entry measures encode+scan like pq_topk
     train_opq_from_parquet(emb_path, _PQ_M, _PQ_K, _PQ_SEED, _PQ_SAMPLE, _OPQ_ITERS)
     read_query_vectors(emb_path, max_id=20)
-    # The AUTO-sized artifacts get the same train-once treatment (VERDICT
-    # r9 #2: only the frozen params were warmed, so on a fresh process —
-    # i.e. every OFFICIAL run — the timed *_auto entries paid a cold
-    # driver-side k-means/OPQ train that the committed warm-VM attribution
-    # could not explain).  The cold cost is not hidden: ANN_STAGE_LOG
-    # captures each train below and the payload reports it under
-    # stage_times["_warmup_cold_train"], measured on THIS VM.  Calls
-    # mirror the registry entries exactly so the cache keys match.
-    from spark_gp_spark.operators.ivf import (
-        ANN_STAGE_LOG,
-        auto_ivf_params,
-        parquet_num_rows,
-    )
-    from spark_gp_spark.operators.pq import auto_pq_params
-
-    warm_snap = len(ANN_STAGE_LOG)
+    # auto-sized parameters
     n_emb = parquet_num_rows(emb_path)
     ivf_auto, pq_auto = auto_ivf_params(n_emb), auto_pq_params(n_emb)
     train_centroids_from_parquet(emb_path, seed=_IVF_SEED)  # ivf_topk_auto
@@ -502,22 +357,37 @@ def main() -> None:
         emb_path, _PQ_M, pq_auto["k"], _PQ_SEED, pq_auto["sample_rows"],
         _OPQ_ITERS,
     )
-    warmup_cold_train = list(ANN_STAGE_LOG[warm_snap:])
-    # encode-once discipline: the persisted index artifact AND the encoded-
-    # codes relation are built outside the timed region (a production ANN
-    # service queries a pre-built index over pre-encoded codes), so the
-    # timed ivfadc_topk_codes entry measures pure scan+join+rank cost.
-    from spark_gp_spark.queries import ensure_ann_codes
+    # the encoded-codes relation ivfadc_topk_codes scans
+    ensure_ann_codes(spark, sf_dir)
+    return _warm
 
-    ensure_ann_codes(spark, SF_DIR)
+
+def main() -> None:
+    spark = make_spark()
+    spark.sparkContext.setLogLevel("ERROR")
+
+    from pyspark.sql import functions as F
+
+    from spark_gp_spark.operators.ivf import ANN_STAGE_LOG
+    from spark_gp_spark.queries import QUERIES, REGISTRY
+
+    bench_queries = [name for name, e in REGISTRY.items() if e.bench]
+    pandas_family = {
+        name for name, e in REGISTRY.items() if e.pandas
+    } | set(BENCH_ONLY_PANDAS)
+
+    # The cold cost of the one-time artifact training is not hidden:
+    # ANN_STAGE_LOG captures each train and the payload reports it under
+    # stage_times["_warmup_cold_train"], measured on THIS VM.
+    warm_snap = len(ANN_STAGE_LOG)
+    _warm = warm_up(spark, SF_DIR)
+    warmup_cold_train = list(ANN_STAGE_LOG[warm_snap:])
 
     # Environment calibration: fixed-work probes reported alongside the
     # timings so per-round numbers can be compared across VMs of different
     # speed (round-5 measurement: an identical trivial mapInPandas job
     # costs 2-4x more on some driver VMs than others; without this anchor a
     # hardware change reads as a code regression).
-    import statistics
-
     base = spark.range(1_000_000).select(F.col("id").cast("double").alias("x"))
     jvm_t, py_t = [], []
     for _ in range(5):
@@ -604,34 +474,10 @@ def main() -> None:
         # cost, so drop all cached blocks between timed queries.
         spark.catalog.clearCache()
 
-    # STAGED-for-r11 entries (registered in QUERIES only at r11): timed
-    # under a SEPARATE payload key — "measure, don't guess" for next
-    # round's registration decision — without moving the headline value
-    # or the timed-suite composition (cross-round comparability).  Any
-    # entry that fails here is recorded as null rather than killing the
-    # bench (staged code must never take the headline down).
-    from spark_gp_spark.queries import STAGED_QUERIES
-
-    staged_times: dict[str, float | None] = {}
-    staged_errors: dict[str, str] = {}
-    for name, (fn, _oracle) in STAGED_QUERIES.items():
-        try:
-            t0 = time.time()
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            staged_times[name] = round(time.time() - t0, 3)
-        except Exception as exc:  # keep the diagnostic in the payload
-            # (ADVICE r10): a silently-broken staged entry must be
-            # explainable from the committed JSON at registration time
-            staged_times[name] = None
-            staged_errors[name] = f"{type(exc).__name__}: {exc}"[:300]
-        spark.catalog.clearCache()
-
-    # Registered-window entries OUTSIDE the fixed headline suite (r13:
-    # the 23 newly registered verbs plus the 9 r12-registered ones that
-    # never graduated) — timed under their own key so every official-
-    # window entry has a current measurement WITHOUT moving the headline
-    # value or the timed-suite composition (cross-round comparability;
-    # same failure isolation as staged_times).
+    # Official-window entries (the first 50 registry keys) OUTSIDE the
+    # timed suite — timed under their own key so every window entry has a
+    # current measurement WITHOUT moving the headline value.  An entry that
+    # fails is recorded as null with its error instead of killing the bench.
     window_times: dict[str, float | None] = {}
     window_errors: dict[str, str] = {}
     for name in [n for n in list(QUERIES)[:50] if n not in bench_queries]:
@@ -672,7 +518,7 @@ def main() -> None:
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     total = round(sum(timings.values()), 3)
     queries_normalized = {
-        k: round(v * (pandas_factor if k in PANDAS_FAMILY else jvm_factor), 2)
+        k: round(v * (pandas_factor if k in pandas_family else jvm_factor), 2)
         for k, v in timings.items()
     }
     # ---- recall@5 of every approximate ANN entry vs the exact baseline —
@@ -875,21 +721,13 @@ def main() -> None:
         "queries_normalized": queries_normalized,
         # per-entry stage split recorded by the operators on THIS VM
         # (VERDICT r9 #2 ANN attribution + #4 expiry drain split);
-        # _warmup_cold_train = the one-time auto-artifact training paid
+        # _warmup_cold_train = the one-time artifact training paid
         # outside the timed region, also measured here
         "stage_times": {
             **stage_times,
             "_warmup_cold_train": warmup_cold_train,
         },
-        # staged-for-next-round entries, timed OUTSIDE the headline
-        # (registered in QUERIES only at the next rotation; numbers here
-        # inform that registration).  staged_errors carries the
-        # class+message for any null so a failed staged run is diagnosable
-        # from this payload alone (ADVICE r10).
-        "staged_times": staged_times,
-        "staged_errors": staged_errors,
-        # every official-window entry not in the fixed headline suite,
-        # timed this run (r13: the 23 newly registered + 9 r12 arrivals)
+        # every official-window entry not in the fixed headline suite
         "window_times": window_times,
         "window_errors": window_errors,
     }

@@ -319,12 +319,11 @@ class GaussianProcessEstimatorBase(Estimator, GaussianProcessParams, GPPersisten
         lower, upper = probe.hyperparameter_bounds()
         p = len(x0)
 
-        # Memoized MULTI-point evaluator (supersedes util.memoize for this
-        # path — same contract, shared across single and batched calls): the
-        # line search submits its whole backtracking ladder as one list, so
-        # several candidate evaluations collapse into ONE distributed
-        # reduction — per-expert work for k candidates rides one job instead
-        # of k (each objective evaluation is a Spark job at scale,
+        # Memoized MULTI-point evaluator (shared across single and batched
+        # calls): the line search submits its whole backtracking ladder as
+        # one list, so several candidate evaluations collapse into ONE
+        # distributed reduction — per-expert work for k candidates rides one
+        # job instead of k (each objective evaluation is a Spark job at scale,
         # GaussianProcessCommons.scala:71-80 / DiffFunctionMemoized.scala:8).
         cache: dict[bytes, tuple[float, np.ndarray]] = {}
         # Observability for benchmarking: distributed reductions (Spark jobs)
@@ -578,21 +577,3 @@ class GaussianProcessModelBase(Model, GaussianProcessParams, GPPersistence):
     def __init__(self, raw_predictor=None) -> None:
         super().__init__()
         self.raw_predictor = raw_predictor
-
-    def save_model(self, path: str, spark) -> None:
-        """Persist the model payload as a single-row parquet (the reference
-        has no save/load at all — SURVEY §2.1 'sinks')."""
-        import pickle
-
-        payload = pickle.dumps(self.raw_predictor)
-        spark.createDataFrame(
-            [(bytearray(payload), type(self).__name__)], "payload binary, cls string"
-        ).write.mode("overwrite").parquet(path)
-
-    @classmethod
-    def load_model(cls, path: str, spark):
-        import pickle
-
-        row = spark.read.parquet(path).first()
-        model = cls(pickle.loads(bytes(row["payload"])))
-        return model

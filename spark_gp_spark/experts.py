@@ -58,15 +58,11 @@ def normalize_points(df: DataFrame, label_col: str, features_col: str) -> DataFr
     Only these two columns are selected, so Catalyst prunes everything else
     out of the scan.
     """
-    field = df.schema[features_col]
-    if field.dataType.typeName() == "udt":  # VectorUDT
-        from pyspark.ml.functions import vector_to_array
+    from .estimator_base import features_as_array  # estimator_base imports us
 
-        features = vector_to_array(F.col(features_col)).cast("array<double>")
-    else:
-        features = F.col(features_col).cast("array<double>")
     return df.select(
-        F.col(label_col).cast("double").alias("label"), features.alias("features")
+        F.col(label_col).cast("double").alias("label"),
+        features_as_array(df, features_col).alias("features"),
     )
 
 

@@ -32,33 +32,18 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .cache import make_cache_registry
 from .hashing import MERSENNE_P, h32, minhash_params
 from .text import tokens, word_ngrams, word_ngrams_of
 
 
-#: persisted intermediates of the LAST ngram_jaccard_pairs call.  The result
+#: persisted intermediates of the LAST ngram_jaccard_pairs call (shared with
+#: the text, incremental-refresh and corpus-prep call sites).  The result
 #: DataFrame is lazy, so the function cannot unpersist its own caches; instead
 #: each new call retires the previous call's — bounding cached blocks to one
 #: invocation per session instead of accumulating forever (unpersisting early
 #: only costs recompute if the OLD result is re-collected, never correctness).
-_LIVE_SHINGLE_CACHES: list[DataFrame] = []
-
-
-def _retire_shingle_caches(new: list[DataFrame]) -> None:
-    # Spark's CacheManager dedupes persisted plans semantically: a repeated
-    # call over the SAME input maps to the same cache entry, so unpersisting
-    # the old handle would evict the new call's (shared) cache and force a
-    # full recompute (measured 3.5 s → 12.8 s on neardup at sf0.1).  Only
-    # retire entries whose plan differs from every new one.
-    for old in _LIVE_SHINGLE_CACHES:
-        try:
-            if not any(old.sameSemantics(nw) for nw in new):
-                old.unpersist()
-        except Exception:
-            # a stale handle from a stopped SparkSession: nothing to free
-            pass
-    _LIVE_SHINGLE_CACHES.clear()
-    _LIVE_SHINGLE_CACHES.extend(new)
+_retire_shingle_caches = make_cache_registry()
 
 
 def _staged_shingles(
@@ -1478,20 +1463,8 @@ def query_corpus_neardup_pairs(
 
 
 #: live caches of the last dedup_span_clean call (staged tokens + positional
-#: gram occurrences) — same retire-on-next-call discipline as
-#: _LIVE_SHINGLE_CACHES above.
-_LIVE_SPAN_CACHES: list[DataFrame] = []
-
-
-def _retire_span_caches(new: list[DataFrame]) -> None:
-    for old in _LIVE_SPAN_CACHES:
-        try:
-            if not any(old.sameSemantics(nw) for nw in new):
-                old.unpersist()
-        except Exception:
-            pass
-    _LIVE_SPAN_CACHES.clear()
-    _LIVE_SPAN_CACHES.extend(new)
+#: gram occurrences).
+_retire_span_caches = make_cache_registry()
 
 
 def dedup_span_clean(
@@ -1733,7 +1706,7 @@ def neardup_threshold_sweep(
     # register alongside (not instead of) the shingle cache the inner
     # ngram_jaccard_pairs call just staged — retiring that now would force
     # a shingle recompute for each aggregate branch below
-    _retire_shingle_caches([*_LIVE_SHINGLE_CACHES, ex])
+    _retire_shingle_caches([ex], add=True)
     n_pairs = ex.groupBy("threshold").agg(F.count("*").alias("n_pairs"))
     n_docs = (
         ex.select(

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .cache import make_cache_registry
 from .hashing import h32
 from .text import bpe_token_count, tokens, word_ngrams_of
 
@@ -33,39 +34,15 @@ SPLIT_TRAIN, SPLIT_VAL = 80, 10
 #: persisted (id, group, n_tokens, hash, bucket) projection of the LAST
 #: token_budget_fill call — it feeds both the offsets aggregate and the
 #: main join, so without a persist the regex token count runs twice per
-#: invocation.  Same retire discipline as dedup._LIVE_SHINGLE_CACHES:
-#: each call retires the previous call's entries whose plan differs
-#: (Spark's CacheManager dedupes persisted plans semantically, so a
-#: same-input repeat shares the entry and must not be evicted).
-_LIVE_TBF_CACHES: list[DataFrame] = []
-
-
-def _retire_caches(registry: list[DataFrame], new: list[DataFrame]) -> None:
-    """Swap a call-site's live persisted frames: unpersist previous entries
-    whose plan differs from every new one (Spark's CacheManager dedupes
-    persisted plans semantically, so a same-input repeat shares the entry
-    and must not be evicted)."""
-    for old in registry:
-        try:
-            if not any(old.sameSemantics(nw) for nw in new):
-                old.unpersist()
-        except Exception:
-            # a stale handle from a stopped SparkSession: nothing to free
-            pass
-    registry.clear()
-    registry.extend(new)
-
-
-def _retire_tbf_caches(new: list[DataFrame]) -> None:
-    _retire_caches(_LIVE_TBF_CACHES, new)
+#: invocation; each call retires the previous call's (operators/cache.py).
+_retire_tbf_caches = make_cache_registry()
 
 
 #: persisted (id, split, shingles) projection of the LAST
 #: split_leakage_check call — it feeds the train-distinct side, the test
 #: posting side, AND the per-test-doc totals, so without a persist the
-#: corpus-wide tokenize+shingle chain runs three times per invocation
-#: (same retire discipline as _LIVE_TBF_CACHES).
-_LIVE_LEAKAGE_CACHES: list[DataFrame] = []
+#: corpus-wide tokenize+shingle chain runs three times per invocation.
+_retire_leakage_caches = make_cache_registry()
 
 
 def split_expr(
@@ -367,7 +344,7 @@ def split_leakage_check(
     ).select(
         id_col, "_split", word_ngrams_of(F.col("_t"), shingle_n).alias("_sh")
     ).persist()
-    _retire_caches(_LIVE_LEAKAGE_CACHES, [base])
+    _retire_leakage_caches([base])
     test_docs = base.filter(F.col("_split") == "test")
     train_post = (
         base.filter(F.col("_split") == "train")
@@ -483,8 +460,8 @@ def _hash_order_prefix(
     bucketed distributed prefix sum shared by token_budget_fill and
     pack_sequences (see token_budget_fill's docstring for why this is NOT
     one window per group).  The 5-column projection is persisted (it feeds
-    both the offsets aggregate and the main join) with the retire
-    discipline of _LIVE_TBF_CACHES."""
+    both the offsets aggregate and the main join) and retired by the
+    next call (_retire_tbf_caches)."""
     from .hashing import MERSENNE_P
     from .text import token_count
 
@@ -780,13 +757,8 @@ def stratified_split(
     )
 
 
-#: persisted cells relation of the LAST split_balance_report call (same
-#: retire discipline as _LIVE_TBF_CACHES).
-_LIVE_BALANCE_CACHES: list[DataFrame] = []
-
-
-def _retire_balance_caches(new: list[DataFrame]) -> None:
-    _retire_caches(_LIVE_BALANCE_CACHES, new)
+#: persisted cells relation of the LAST split_balance_report call.
+_retire_balance_caches = make_cache_registry()
 
 
 def split_balance_report(

@@ -28,27 +28,15 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .cache import make_cache_registry
 from .hashing import h32
 from .ivf import _sq_dists
 from .similarity import norm, paired_cosine
 from .text import tokens
 
-#: live cache of the last semdedup assigned relation — same discipline as
-#: dedup._LIVE_SHINGLE_CACHES: each call retires the previous call's entry
-#: (unless the plans are semantically identical, in which case Spark's
-#: CacheManager shares the entry and unpersisting would evict both).
-_LIVE_ASSIGN_CACHES: list[DataFrame] = []
-
-
-def _retire_assign_caches(new: list[DataFrame]) -> None:
-    for old in _LIVE_ASSIGN_CACHES:
-        try:
-            if not any(old.sameSemantics(nw) for nw in new):
-                old.unpersist()
-        except Exception:
-            pass
-    _LIVE_ASSIGN_CACHES.clear()
-    _LIVE_ASSIGN_CACHES.extend(new)
+#: live cache of the last semdedup assigned relation: each call retires the
+#: previous call's entry (operators/cache.py).
+_retire_assign_caches = make_cache_registry()
 
 
 def _assigned_with_order(

@@ -1,5 +1,4 @@
 from .integrator import expected_of_function_of_normal
 from .linalg import logdet_and_inv
-from .memoize import memoize_by_x
 
-__all__ = ["expected_of_function_of_normal", "logdet_and_inv", "memoize_by_x"]
+__all__ = ["expected_of_function_of_normal", "logdet_and_inv"]

@@ -91,15 +91,15 @@ def test_variance_column_and_save_load(spark, tmp_path):
     row = model.transform(df).select("prediction", "variance").first()
     assert row["variance"] > 0
 
+    # the variance column survives the GPPersistence round trip
     path = str(tmp_path / "gpr_model")
-    model.save_model(path, spark)
+    model.save(path)
     from spark_gp_spark.regression import GaussianProcessRegressionModel
 
-    loaded = GaussianProcessRegressionModel.load_model(path, spark)
-    loaded._set(featuresCol="features", predictionCol="prediction")
-    p1 = model.transform(df).select("prediction").limit(5).collect()
-    p2 = loaded.transform(df).select("prediction").limit(5).collect()
-    assert [r[0] for r in p1] == pytest.approx([r[0] for r in p2])
+    loaded = GaussianProcessRegressionModel.load(path)
+    p1 = model.transform(df).select("prediction", "variance").limit(5).collect()
+    p2 = loaded.transform(df).select("prediction", "variance").limit(5).collect()
+    assert [tuple(r) for r in p1] == pytest.approx([tuple(r) for r in p2])
 
 
 def test_greedy_active_set_provider(spark):

@@ -11,19 +11,10 @@ asserted against `.explain` output so regressions fail loudly.
 
 import pytest
 
+from spark_gp_spark.queries import QUERIES
+
 SF = "/root/testdata/sf0.001"
 
-
-
-def _verb(name):
-    """(fn, oracle) lookup that survives rotation: entries move from
-    STAGED_QUERIES into the live registry when their round's window
-    opens, and these shape/parity locks must keep running either way."""
-    from spark_gp_spark.queries import ORACLE_SQL, QUERIES, STAGED_QUERIES
-
-    if name in STAGED_QUERIES:
-        return STAGED_QUERIES[name]
-    return QUERIES[name], ORACLE_SQL.get(name)
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -742,7 +733,7 @@ def test_staged_r13_verbs_single_scan_thin_shuffles(spark):
     for name in (
         "paragraph_dedup_stats", "embedding_norm_outliers", "source_ks_drift",
     ):
-        fn, _sql = _verb(name)
+        fn = QUERIES[name]
         nodes = _staged_plan_nodes(fn(spark, SF))
         scans = [n for n in nodes if "FileSourceScan" in n.nodeName()]
         assert not scans, (name, [n.nodeName() for n in scans])
@@ -757,7 +748,7 @@ def test_stratified_split_one_shuffle_and_pii_scan_no_join(spark):
     pure scan -> project -> stack -> one aggregate, no join at all."""
 
     spark.catalog.clearCache()
-    nodes = _staged_plan_nodes(_verb("stratified_split")[0](spark, SF))
+    nodes = _staged_plan_nodes(QUERIES["stratified_split"](spark, SF))
     assert not [n for n in nodes if "Join" in n.nodeName()]
     hash_exch = [
         n for n in nodes
@@ -765,7 +756,7 @@ def test_stratified_split_one_shuffle_and_pii_scan_no_join(spark):
     ]
     assert len(hash_exch) == 1, [n.nodeName() for n in hash_exch]
 
-    nodes = _staged_plan_nodes(_verb("pii_scan_report")[0](spark, SF))
+    nodes = _staged_plan_nodes(QUERIES["pii_scan_report"](spark, SF))
     assert not [n for n in nodes if "Join" in n.nodeName()]
 
 
@@ -787,13 +778,13 @@ def test_staged_r13_second_wave_plan_shapes(spark):
 
     spark.catalog.clearCache()
     nodes = _staged_plan_nodes(
-        _verb("event_anomaly_screen")[0](spark, SF)
+        QUERIES["event_anomaly_screen"](spark, SF)
     )
     scans = [n for n in nodes if n.nodeName().startswith("Scan parquet")]
     assert not scans, [n.nodeName() for n in scans]
     assert any(n.nodeName() == "InMemoryTableScan" for n in nodes)
 
-    nodes = _staged_plan_nodes(_verb("rule_cofail_matrix")[0](spark, SF))
+    nodes = _staged_plan_nodes(QUERIES["rule_cofail_matrix"](spark, SF))
     assert not [n for n in nodes if "Join" in n.nodeName()]
     singles = [
         n for n in nodes
@@ -805,7 +796,7 @@ def test_staged_r13_second_wave_plan_shapes(spark):
     assert "text" not in cols and len(cols) <= 30
 
     nodes = _staged_plan_nodes(
-        _verb("referential_integrity_report")[0](spark, SF)
+        QUERIES["referential_integrity_report"](spark, SF)
     )
     assert not [n for n in nodes if "Cartesian" in n.nodeName()]
     for n in nodes:
@@ -813,7 +804,7 @@ def test_staged_r13_second_wave_plan_shapes(spark):
             schema = n.toString().split("ReadSchema:")[-1]
             assert schema.count(":") <= 2, schema[:120]
 
-    nodes = _staged_plan_nodes(_verb("leakage_safe_split")[0](spark, SF))
+    nodes = _staged_plan_nodes(QUERIES["leakage_safe_split"](spark, SF))
     assert _exchange_payload_cols(nodes) == []
 
 
@@ -825,7 +816,7 @@ def test_event_volume_trend_reads_only_days_cache(spark):
     calendar-bounded cache."""
 
     spark.catalog.clearCache()
-    nodes = _staged_plan_nodes(_verb("event_volume_trend")[0](spark, SF))
+    nodes = _staged_plan_nodes(QUERIES["event_volume_trend"](spark, SF))
     scans = [n for n in nodes if n.nodeName().startswith("Scan parquet")]
     assert not scans, [n.nodeName() for n in scans]
     assert any(n.nodeName() == "InMemoryTableScan" for n in nodes)
@@ -841,7 +832,7 @@ def test_user_concentration_reads_only_counts_cache(spark):
 
     spark.catalog.clearCache()
     nodes = _staged_plan_nodes(
-        _verb("user_concentration_report")[0](spark, SF)
+        QUERIES["user_concentration_report"](spark, SF)
     )
     scans = [n for n in nodes if n.nodeName().startswith("Scan parquet")]
     assert not scans, [n.nodeName() for n in scans]
@@ -872,7 +863,7 @@ def test_staged_r13_third_wave_plan_shapes(spark):
 
     spark.catalog.clearCache()
     nodes = _staged_plan_nodes(
-        _verb("order_reconciliation_report")[0](spark, SF)
+        QUERIES["order_reconciliation_report"](spark, SF)
     )
     assert not [n for n in nodes if "Cartesian" in n.nodeName()]
     for n in nodes:
@@ -885,7 +876,7 @@ def test_staged_r13_third_wave_plan_shapes(spark):
                if "HashAggregate" in n.nodeName())
 
     spark.catalog.clearCache()
-    nodes = _staged_plan_nodes(_verb("benford_screen")[0](spark, SF))
+    nodes = _staged_plan_nodes(QUERIES["benford_screen"](spark, SF))
     scans = [n for n in nodes if n.nodeName().startswith("Scan parquet")]
     assert len(scans) <= 1, [n.nodeName() for n in scans]
     for n in scans:
@@ -895,7 +886,7 @@ def test_staged_r13_third_wave_plan_shapes(spark):
 
     spark.catalog.clearCache()
     nodes = _staged_plan_nodes(
-        _verb("lang_mislabel_report")[0](spark, SF)
+        QUERIES["lang_mislabel_report"](spark, SF)
     )
     scans = [n for n in nodes if n.nodeName().startswith("Scan parquet")]
     assert len(scans) == 1, [n.nodeName() for n in scans]
@@ -911,7 +902,7 @@ def test_staged_r13_third_wave_plan_shapes(spark):
 
     spark.catalog.clearCache()
     nodes = _staged_plan_nodes(
-        _verb("dedup_survivor_bias")[0](spark, SF)
+        QUERIES["dedup_survivor_bias"](spark, SF)
     )
     assert not [n for n in nodes if "Cartesian" in n.nodeName()]
     for n in nodes:
@@ -929,7 +920,7 @@ def test_storage_layout_report_scan_pruned_to_partition_and_metadata(spark):
 
     spark.catalog.clearCache()
     nodes = _staged_plan_nodes(
-        _verb("storage_layout_report")[0](spark, SF)
+        QUERIES["storage_layout_report"](spark, SF)
     )
     scans = [n for n in nodes if n.nodeName().startswith("Scan parquet")]
     assert scans
@@ -949,7 +940,7 @@ def test_split_balance_report_reads_only_cells_cache(spark):
 
     spark.catalog.clearCache()
     nodes = _staged_plan_nodes(
-        _verb("split_balance_report")[0](spark, SF)
+        QUERIES["split_balance_report"](spark, SF)
     )
     scans = [n for n in nodes if n.nodeName().startswith("Scan parquet")]
     assert not scans, [n.nodeName() for n in scans]

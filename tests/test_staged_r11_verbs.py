@@ -125,11 +125,12 @@ def test_staged_ann_recall_report_matches_duckdb_oracle(spark):
     # at other sfs the Spark side correctly retrains while the oracle
     # replays sf0.01 centroids.
     sf_dir = "/root/testdata/sf0.01"
-    from spark_gp_spark.queries import _ANN_RECALL_SQL, ann_recall_report
+    from spark_gp_spark.queries import _sql_ann_recall, ann_recall_report
 
-    assert _ANN_RECALL_SQL is not None  # testdata present in this env
+    sql = _sql_ann_recall()
+    assert sql is not None  # testdata present in this env
     got = ann_recall_report(spark, sf_dir).toPandas()
-    want = _con(sf_dir, "embeddings").execute(_ANN_RECALL_SQL).df()
+    want = _con(sf_dir, "embeddings").execute(sql).df()
     _assert_parity(got, want)
     # non-vacuity: the report distinguishes queries (recall genuinely varies)
     assert got["recall"].nunique() >= 3

@@ -118,22 +118,18 @@ def test_pii_scan_report_counts_docs_and_hits(spark):
 
 
 def test_staged_r12_verbs_duckdb_parity(spark):
-    """The exact side-by-side the r13 driver window runs, at sf0.001 —
-    the 23 r12-staged verbs (REGISTERED at the r13 rotation; this gate
-    keeps running against the live registry) plus anything newly staged
-    in STAGED_QUERIES."""
-    from spark_gp_spark.queries import ORACLE_SQL, QUERIES, STAGED_QUERIES
+    """The driver's side-by-side at sf0.001 for the 23 verbs that lead
+    the registry."""
+    from spark_gp_spark.queries import ORACLE_SQL, QUERIES
 
     registered_r13 = list(QUERIES)[:23]
     con = _con(
         SF, "documents", "events", "embeddings", "lineitem", "orders",
         "customer", "supplier", "part", "nation", "region",
     )
-    verbs = {n: (QUERIES[n], ORACLE_SQL[n]) for n in registered_r13}
-    verbs.update(STAGED_QUERIES)
-    for name, (fn, sql) in verbs.items():
-        got = fn(spark, SF).toPandas()
-        want = con.execute(sql).fetchdf()
+    for name in registered_r13:
+        got = QUERIES[name](spark, SF).toPandas()
+        want = con.execute(ORACLE_SQL[name]).fetchdf()
         _assert_parity(got, want)
 
 

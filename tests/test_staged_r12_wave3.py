@@ -10,8 +10,7 @@ Layers: semantics on hand-built frames (expected classes/values computed
 by hand — including the exact integer micro-unit arithmetic and the
 tight-boundary inclusivity of the reconciliation classes, and the 9-row
 Benford spine emitting zero-mass digits), then DuckDB parity at sf0.001
-via test_staged_r12_verbs.py::test_staged_r12_verbs_duckdb_parity, which
-iterates the whole STAGED_QUERIES inventory."""
+via test_staged_r12_verbs.py::test_staged_r12_verbs_duckdb_parity."""
 
 from pyspark.sql import functions as F
 
@@ -341,6 +340,8 @@ def test_avg_exactness_fixed_verbs_parity_pinned(spark):
     fold orders via spark.sql.shuffle.partitions {1, 2, 7, 17, 32}; a
     regression to double sums flaps on a boundary cell and fails here
     rather than in a 1-in-3 multi-file run."""
+    from spark_gp_spark.queries import ORACLE_SQL, QUERIES
+
     sf = "/root/testdata/sf0.001"
     con = _mk_con(sf)
     verbs = [
@@ -349,7 +350,7 @@ def test_avg_exactness_fixed_verbs_parity_pinned(spark):
         "order_reconciliation_report",
     ]
     oracle = {
-        name: con.execute(_wverb(name)[1]).fetchdf()
+        name: con.execute(ORACLE_SQL[name]).fetchdf()
         for name in verbs
     }
     before = spark.conf.get("spark.sql.shuffle.partitions")
@@ -357,7 +358,7 @@ def test_avg_exactness_fixed_verbs_parity_pinned(spark):
         for parts in ("1", "2", "7", "17", "32"):
             spark.conf.set("spark.sql.shuffle.partitions", parts)
             for name in verbs:
-                got = _wverb(name)[0](spark, sf).toPandas()
+                got = QUERIES[name](spark, sf).toPandas()
                 _pin_parity(got, oracle[name], (name, parts))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
@@ -385,10 +386,3 @@ def _pin_parity(got, want, ctx):
     for c in cols:
         assert (g[c].values == w[c].values).all(), (ctx, c)
 
-
-def _wverb(name):
-    from spark_gp_spark.queries import ORACLE_SQL, QUERIES, STAGED_QUERIES
-
-    if name in STAGED_QUERIES:
-        return STAGED_QUERIES[name]
-    return QUERIES[name], ORACLE_SQL.get(name)

@@ -4,18 +4,15 @@ Runs every ``queries()`` entry at the given scale factor and compares it with
 its ``oracle_sql()`` via DuckDB: row count, sorted-by-name schema, and
 order-insensitive value comparison.  Usage:
 
-    python tools/check_correctness.py [sf_dir] [query ...] [--window|--staged]
+    python tools/check_correctness.py [sf_dir] [query ...] [--window]
 
 ``--window`` restricts to the first 50 registry keys — the exact slice the
-round driver records official rows for.  ``--staged`` runs the
-staged-for-next-round inventory (queries.STAGED_QUERIES) instead of the
-registry — the same side-by-side check those entries will face once
-windowed.
+round driver records official rows for.
 
 Scale caveat: the ANN oracles bake artifacts (centroids, codebooks, LUTs)
 trained on the DRIVER'S correctness corpus, /root/testdata/sf0.01, because
-oracle_sql() is a static dict built at import (documented in each entry's
-docstring).  Running this tool at sf0.01 is authoritative; at other scale
+oracle_sql() is one static dict for every scale factor (documented in each
+entry's docstring).  Running this tool at sf0.01 is authoritative; at other scale
 factors the artifact-baking ANN entries — the refine-step autos
 (ivfadc/pq/opq_topk_auto) and the frozen trained-codebook entries
 (e.g. opq_topk) — are EXPECTED to mismatch: the Spark side correctly
@@ -76,9 +73,8 @@ def compare(name: str, spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame) -> lis
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:] if a not in ("--window", "--staged")]
+    args = [a for a in sys.argv[1:] if a != "--window"]
     window_only = "--window" in sys.argv[1:]
-    staged_only = "--staged" in sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
@@ -106,16 +102,6 @@ def main() -> int:
         # the round driver records official rows for the FIRST 50 registry
         # keys only — --window replicates exactly that slice
         queries = dict(list(queries.items())[:50])
-    if staged_only:
-        # the staged-for-next-round inventory (queries.STAGED_QUERIES):
-        # built and parity-proven but not yet registered — this flag runs
-        # the same side-by-side check the entries will face once windowed
-        from spark_gp_spark.queries import STAGED_QUERIES
-
-        queries = {n: fn for n, (fn, _sql) in STAGED_QUERIES.items()}
-        oracles = {
-            n: sql for n, (_fn, sql) in STAGED_QUERIES.items() if sql
-        }
 
     n_pass = n_fail = 0
     for name, fn in queries.items():

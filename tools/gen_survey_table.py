@@ -1,10 +1,11 @@
 """Regenerate SURVEY.md §2.8's per-query status table from the registry.
 
-One row per QUERIES entry: operator file(s) its implementation touches
-(static scan of queries.py for module references, chasing local helper
-calls one level), oracle class (sql vs rows-only), and the last round with
-an official driver correctness row (scanned from CORRECTNESS_r0*.json;
-hash-green or rows-only records both count).  Run from the repo root:
+One row per queries.REGISTRY entry, in registry order: operator file(s)
+its implementation touches (static scan of queries.py for module
+references, chasing local helper calls one level), oracle class (sql vs
+rows-only), and the last round with an official driver correctness row
+(scanned from CORRECTNESS_r0*.json; hash-green or rows-only records both
+count).  Run from the repo root:
 
     python tools/gen_survey_table.py          # prints the table
     python tools/gen_survey_table.py --patch  # rewrites the SURVEY block
@@ -82,13 +83,13 @@ def build_table() -> str:
             if hash_green or rows_only:
                 greens[k] = f"r{r}"
 
-    from spark_gp_spark.queries import ORACLE_SQL, QUERIES
+    from spark_gp_spark.queries import ORACLE_SQL, REGISTRY
 
     lines = [
         "| # | registry query | operator(s) | oracle | last official row |",
         "|---|---|---|---|---|",
     ]
-    for i, k in enumerate(QUERIES, 1):
+    for i, k in enumerate(REGISTRY, 1):
         m = sorted(mods_of(k)) or ["queries.py (Spark SQL)"]
         oracle = "sql" if k in ORACLE_SQL else "rows-only"
         last = greens.get(k, "new")

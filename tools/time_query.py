@@ -34,74 +34,19 @@ def main() -> None:
     ap.add_argument("--no-warm-ann", action="store_true")
     args = ap.parse_args()
 
-    import bench  # reuse make_spark so configs never drift from the bench
+    import bench  # reuse make_spark/warm_up so configs never drift from the bench
 
     spark = bench.make_spark()
     spark.sparkContext.setLogLevel("ERROR")
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import DoubleType
 
     from spark_gp_spark.queries import QUERIES
 
-    # same untimed warmups as bench.py main()
-    from spark_gp_spark.queries import q1_pricing_summary
-
-    q1_pricing_summary(spark, args.sf).write.format("noop").mode("overwrite").save()
-
-    @F.pandas_udf(DoubleType())
-    def _warm(v):
-        return v * 1.0
-
-    spark.range(10_000).repartition(int(bench.CPUS)).select(
-        _warm(F.col("id").cast("double")).alias("x")
-    ).agg({"x": "sum"}).collect()
-
-    if not args.no_warm_ann:
-        needs_ann = any(
-            any(t in q for t in ("ivf", "pq_", "opq", "lsh", "ann", "semdedup",
-                                 "hard_negatives", "cluster_", "embedding_neardup"))
-            for q in args.queries
-        )
-        if needs_ann:
-            from spark_gp_spark.operators.ivf import train_centroids_from_parquet
-            from spark_gp_spark.operators.pq import (
-                read_query_vectors,
-                train_opq_from_parquet,
-                train_pq_codebooks_from_parquet,
-                train_pq_codebooks_residual_from_parquet,
-            )
-            from spark_gp_spark.queries import (
-                _IVF_K, _IVF_SAMPLE, _IVF_SEED, _OPQ_ITERS,
-                _PQ_K, _PQ_M, _PQ_SAMPLE, _PQ_SEED,
-                ensure_ann_codes,
-            )
-            emb = f"{args.sf}/embeddings.parquet"
-            cents = train_centroids_from_parquet(emb, _IVF_K, _IVF_SEED, _IVF_SAMPLE)
-            train_pq_codebooks_from_parquet(emb, _PQ_M, _PQ_K, _PQ_SEED, _PQ_SAMPLE)
-            train_pq_codebooks_residual_from_parquet(
-                emb, cents, _PQ_M, _PQ_K, _PQ_SEED, _PQ_SAMPLE
-            )
-            train_opq_from_parquet(emb, _PQ_M, _PQ_K, _PQ_SEED, _PQ_SAMPLE, _OPQ_ITERS)
-            read_query_vectors(emb, max_id=20)
-            from spark_gp_spark.operators.ivf import auto_ivf_params, parquet_num_rows
-            from spark_gp_spark.operators.pq import auto_pq_params
-
-            n_emb = parquet_num_rows(emb)
-            ivf_auto, pq_auto = auto_ivf_params(n_emb), auto_pq_params(n_emb)
-            train_centroids_from_parquet(emb, seed=_IVF_SEED)
-            auto_cents = train_centroids_from_parquet(
-                emb, ivf_auto["cells"], _IVF_SEED, ivf_auto["sample_rows"]
-            )
-            train_pq_codebooks_residual_from_parquet(
-                emb, auto_cents, _PQ_M, pq_auto["k"], _PQ_SEED, pq_auto["sample_rows"]
-            )
-            train_pq_codebooks_from_parquet(
-                emb, _PQ_M, pq_auto["k"], _PQ_SEED, pq_auto["sample_rows"]
-            )
-            train_opq_from_parquet(
-                emb, _PQ_M, pq_auto["k"], _PQ_SEED, pq_auto["sample_rows"], _OPQ_ITERS
-            )
-            ensure_ann_codes(spark, args.sf)
+    needs_ann = not args.no_warm_ann and any(
+        any(t in q for t in ("ivf", "pq_", "opq", "lsh", "ann", "semdedup",
+                             "hard_negatives", "cluster_", "embedding_neardup"))
+        for q in args.queries
+    )
+    bench.warm_up(spark, args.sf, ann=needs_ann)
 
     results: dict[str, list[float]] = {}
     for name in args.queries:
