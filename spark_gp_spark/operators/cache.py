@@ -1,41 +1,54 @@
-"""Session-scoped persisted-relation retirement.
+"""One lifetime rule for persisted relations that a returned lazy result
+still reads.
 
-Several operators persist a thin multi-consumer relation (shingle
-postings, value counts, norm projections) and must free the PREVIOUS
-invocation's cache when a new one supersedes it — without evicting a
-handle Spark's CacheManager has semantically deduplicated onto the new
-plan.  ``make_cache_registry()`` returns one ``retire(new)`` closure per
-registry; call sites that share a registry share one cache lifetime.
+``persist(df)`` persists the frame and registers it in the calling
+context's open ``cache_scope()``.  The outermost scope's exit unpersists
+every frame registered in it; a scope opened inside an open scope joins it,
+so an inner exit releases nothing.  Because nothing is released while the
+scope is open, a repeated call over the same input maps onto the same
+cache entry and every lazy result built in the scope stays cheap to
+collect.  With no scope open, a frame lives until its caller unpersists it
+or calls ``spark.catalog.clearCache()`` — Spark's own rule.
+
+The scope is a ``contextvars`` variable, so each thread sees only the
+scope it opened.  A persist that the same function releases before it
+returns does not go through here: it keeps its explicit ``unpersist``.
 """
 
 from __future__ import annotations
 
+import contextlib
+import contextvars
+from collections.abc import Iterator
 
-def make_cache_registry():
-    """A per-call-site retirement closure: ``retire(new)`` unpersists
-    every previously registered frame whose plan differs from all of
-    ``new`` (sameSemantics-deduplicated repeats must survive), then
-    tracks ``new``.  Stale handles from a stopped SparkSession are
-    ignored.  Spark's CacheManager dedupes persisted plans semantically: a
-    repeated call over the SAME input maps to the same cache entry, so
-    unpersisting the old handle would evict the new call's (shared) cache
-    and force a full recompute (measured 3.5 s -> 12.8 s on neardup at
-    sf0.1).  ``retire(new, add=True)`` registers ``new`` alongside the live
-    entries without retiring any."""
-    registry: list = []
+from pyspark.sql import DataFrame
 
-    def retire(new: list, add: bool = False) -> None:
-        if add:
-            registry.extend(new)
-            return
-        for old in registry:
-            try:
-                if not any(old.sameSemantics(nw) for nw in new):
-                    old.unpersist()
-            except Exception:
-                # a stale handle from a stopped SparkSession: nothing to free
-                pass
-        registry.clear()
-        registry.extend(new)
+_scope: contextvars.ContextVar[list[DataFrame] | None] = contextvars.ContextVar(
+    "cache_scope", default=None
+)
 
-    return retire
+
+def persist(df: DataFrame) -> DataFrame:
+    """``df.persist()``, owned by the open ``cache_scope()`` if there is one."""
+    df = df.persist()
+    frames = _scope.get()
+    if frames is not None:
+        frames.append(df)
+    return df
+
+
+@contextlib.contextmanager
+def cache_scope() -> Iterator[None]:
+    """Unpersist, at exit, every frame ``persist`` registered inside.  Nested
+    scopes join the outermost one."""
+    if _scope.get() is not None:
+        yield
+        return
+    frames: list[DataFrame] = []
+    token = _scope.set(frames)
+    try:
+        yield
+    finally:
+        _scope.reset(token)
+        for df in frames:
+            df.unpersist()

@@ -32,18 +32,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .cache import make_cache_registry
+from .cache import persist
 from .hashing import MERSENNE_P, h32, minhash_params
 from .text import tokens, word_ngrams, word_ngrams_of
-
-
-#: persisted intermediates of the LAST ngram_jaccard_pairs call (shared with
-#: the text, incremental-refresh and corpus-prep call sites).  The result
-#: DataFrame is lazy, so the function cannot unpersist its own caches; instead
-#: each new call retires the previous call's — bounding cached blocks to one
-#: invocation per session instead of accumulating forever (unpersisting early
-#: only costs recompute if the OLD result is re-collected, never correctness).
-_retire_shingle_caches = make_cache_registry()
 
 
 def _staged_shingles(
@@ -241,7 +232,7 @@ def minhash_lsh_pairs(
     # The md5-chain signature + shingle set is the expensive part — persist it
     # so the band-size guard and the two candidate-join sides read it once
     # instead of recomputing it three times.
-    sigs = _minhash_staged(df, text_col, id_col, num_hashes, shingle_n, seed).persist()
+    sigs = persist(_minhash_staged(df, text_col, id_col, num_hashes, shingle_n, seed))
     # The band self-join carries only (band, key, id) — the heavy shingle
     # arrays are fetched by id AFTER candidate dedup, so they never ride
     # through the band shuffle (at corpus scale the candidate set is orders
@@ -465,12 +456,11 @@ def ngram_jaccard_pairs(
     """
     from pyspark.sql import Window
 
-    sh = _staged_shingles(df, text_col, id_col, shingle_n).persist()
+    sh = persist(_staged_shingles(df, text_col, id_col, shingle_n))
     sizes = sh.select("_id", F.size("shingles").alias("_n"))
     post = sh.select("_id", F.explode("shingles").alias("sh"))
     if prefix:
-        post = post.persist()
-    _retire_shingle_caches([sh, post] if prefix else [sh])
+        post = persist(post)
 
     if prefix:
         freq = post.groupBy("sh").agg(F.count("*").alias("_df"))
@@ -561,10 +551,9 @@ def containment_pairs(
 
     Output: (id_a < id_b, common, cont_a_in_b, cont_b_in_a), 6-dp rounded.
     """
-    sh = _staged_shingles(df, text_col, id_col, shingle_n).persist()
+    sh = persist(_staged_shingles(df, text_col, id_col, shingle_n))
     sizes = sh.select("_id", F.size("shingles").alias("_n"))
     post = sh.select("_id", F.explode("shingles").alias("sh"))
-    _retire_shingle_caches([sh])
     if max_posting_size is not None:
         small = post.groupBy("sh").count().filter(F.col("count") <= max_posting_size)
         post = post.join(small.select("sh"), "sh", "left_semi")
@@ -1462,11 +1451,6 @@ def query_corpus_neardup_pairs(
     )
 
 
-#: live caches of the last dedup_span_clean call (staged tokens + positional
-#: gram occurrences).
-_retire_span_caches = make_cache_registry()
-
-
 def dedup_span_clean(
     df: DataFrame,
     n: int = 8,
@@ -1501,9 +1485,7 @@ def dedup_span_clean(
     by document length, not corpus size."""
     from .hashing import h60
 
-    toks = df.select(
-        F.col(id_col), tokens(F.col(text_col)).alias("_toks")
-    ).persist()
+    toks = persist(df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks")))
     pos_grams = F.when(
         F.size("_toks") >= n,
         F.transform(
@@ -1511,12 +1493,10 @@ def dedup_span_clean(
             lambda i: F.concat_ws(" ", *[F.get("_toks", i + j) for j in range(n)]),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    occ = (
+    occ = persist(
         toks.select(id_col, F.posexplode(pos_grams).alias("_pos", "_g"))
         .select(id_col, "_pos", h60(F.col("_g")).alias("_gh"))
-        .persist()
     )
-    _retire_span_caches([toks, occ])
     dup = (
         occ.groupBy("_gh")
         .agg(F.count_distinct(F.col(id_col)).alias("_df"))
@@ -1627,9 +1607,12 @@ def neardup_against_history(
     max verified Jaccard (audit column), rounded to 6 dp before the
     threshold compare so engine-side last-ulp sums cannot flip it.
     """
-    sig_b = _minhash_staged(new_df, text_col, id_col, num_hashes, shingle_n, seed)
-    sig_h = _minhash_staged(history_df, text_col, id_col, num_hashes, shingle_n, seed)
-    _retire_shingle_caches([sig_b.persist(), sig_h.persist()])
+    sig_b = persist(
+        _minhash_staged(new_df, text_col, id_col, num_hashes, shingle_n, seed)
+    )
+    sig_h = persist(
+        _minhash_staged(history_df, text_col, id_col, num_hashes, shingle_n, seed)
+    )
 
     def banded(sigs: DataFrame, out_id: str) -> DataFrame:
         return sigs.select(
@@ -1693,20 +1676,14 @@ def neardup_threshold_sweep(
         threshold=grid[0],
         shingle_n=shingle_n,
     )
-    ex = (
+    ex = persist(
         pairs.select(
             F.explode(F.array(*[F.lit(t) for t in grid])).alias("threshold"),
             "id_a",
             "id_b",
             "jaccard",
-        )
-        .filter(F.col("jaccard") >= F.col("threshold"))
-        .persist()
+        ).filter(F.col("jaccard") >= F.col("threshold"))
     )
-    # register alongside (not instead of) the shingle cache the inner
-    # ngram_jaccard_pairs call just staged — retiring that now would force
-    # a shingle recompute for each aggregate branch below
-    _retire_shingle_caches([ex], add=True)
     n_pairs = ex.groupBy("threshold").agg(F.count("*").alias("n_pairs"))
     n_docs = (
         ex.select(
@@ -1839,8 +1816,7 @@ def minhash_estimate_report(
     (banded equi-join, hot-band cap, heavy arrays fetched by id AFTER
     candidate dedup); the estimate adds one zip_with fold over two
     16-element arrays per candidate."""
-    sigs = _minhash_staged(df, text_col, id_col, num_hashes, shingle_n, seed).persist()
-    _retire_shingle_caches([sigs])
+    sigs = persist(_minhash_staged(df, text_col, id_col, num_hashes, shingle_n, seed))
     banded = sigs.select(
         "_id", minhash_band_struct(F.col("sig"), num_hashes, bands).alias("bk")
     ).select("_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
@@ -1918,16 +1894,15 @@ def paragraph_dedup_stats(
 
     Scale shape: paragraph TEXT never leaves the scan stage — the explode
     projects straight down to (id, md5(paragraph), length(paragraph)),
-    and that thin relation is persisted (retired via the module's shared
-    cache registry) so the duplicate count and the flag join both read it
-    without a second pass over the corpus; every shuffle carries the
-    32-char key + two ints.  Both joins are plain hash equi-joins; no
-    window over the corpus.  (The r12 plan audit caught the first cut
-    shuffling full paragraph text through the flag join and scanning the
-    corpus twice — this shape is the fix, asserted in
+    and that thin relation is persisted so the duplicate count and the
+    flag join both read it without a second pass over the corpus; every
+    shuffle carries the 32-char key + two ints.  Both joins are plain hash
+    equi-joins; no window over the corpus.  (The r12 plan audit caught the
+    first cut shuffling full paragraph text through the flag join and
+    scanning the corpus twice — this shape is the fix, asserted in
     tests/test_plans.py.)"""
     para = F.explode(F.split(F.col(text_col), "\n\n")).alias("para")
-    thin = (
+    thin = persist(
         df.select(id_col, para)
         .filter(F.length(F.trim(F.col("para"))) > 0)
         .select(
@@ -1935,9 +1910,7 @@ def paragraph_dedup_stats(
             F.md5(F.col("para")).alias("_k"),
             F.length("para").alias("_plen"),
         )
-        .persist()
     )
-    _retire_shingle_caches([thin])
     counts = thin.groupBy("_k").agg(
         F.countDistinct(id_col).alias("_n_docs")
     )

@@ -26,7 +26,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .cache import make_cache_registry
+from .cache import persist
 
 
 @dataclass(frozen=True, eq=False)
@@ -358,10 +358,6 @@ def grouped_exact_quantiles(
     )
 
 
-#: per-call-site persisted-relation retirement (operators/cache.py)
-_retire_ks_caches = make_cache_registry()
-
-
 def source_ks_drift(
     df: DataFrame,
     group_col: str = "source",
@@ -385,7 +381,7 @@ def source_ks_drift(
     (n_a·n_b)) with c defaulting to the alpha=0.01 constant 1.628.
 
     Scale shape: ONE aggregate collapses the corpus to (source, value)
-    counts, PERSISTED (retired via the module cache registry) because five
+    counts, PERSISTED because five
     downstream consumers (totals, the value grid, the dense left join, and
     both sides of the pair sweep) derive from it — uncached, each would
     re-scan the corpus (the r12 plan audit measured 6 scans / 23
@@ -397,10 +393,11 @@ def source_ks_drift(
     corpus-free."""
     from pyspark.sql import Window
 
-    counts = df.groupBy(group_col, F.col(value_col).alias("_v")).agg(
-        F.count("*").alias("_c")
-    ).persist()
-    _retire_ks_caches([counts])
+    counts = persist(
+        df.groupBy(group_col, F.col(value_col).alias("_v")).agg(
+            F.count("*").alias("_c")
+        )
+    )
     totals = counts.groupBy(group_col).agg(F.sum("_c").alias("_n"))
     values = counts.select("_v").distinct()
     grid = values.crossJoin(F.broadcast(totals))
@@ -458,9 +455,6 @@ def source_ks_drift(
     )
 
 
-_retire_anom_caches = make_cache_registry()
-
-
 def robust_anomaly_screen(
     df: DataFrame,
     value_col: str = "value",
@@ -486,7 +480,7 @@ def robust_anomaly_screen(
     counts relation, never the raw rows (a per-group sort of raw rows
     would put 100 TB onto |groups| tasks).  The counts relation is
     persisted (three consumers: totals, the median prefix scan, the
-    deviation re-aggregation) and retired via the module cache registry.
+    deviation re-aggregation).
 
     Output: (group, n_events, median, mad, threshold, n_anomalies,
     anomaly_rate) — one row per group."""
@@ -494,8 +488,7 @@ def robust_anomaly_screen(
 
     g, v = group_col, value_col
     kc = float(k) * float(scale)
-    counts = df.groupBy(g, v).agg(F.count("*").cast("long").alias("_cnt")).persist()
-    _retire_anom_caches([counts])
+    counts = persist(df.groupBy(g, v).agg(F.count("*").cast("long").alias("_cnt")))
     tot = counts.groupBy(g).agg(F.sum("_cnt").cast("long").alias("_n"))
     half = F.ceil(F.lit(0.5) * F.col("_n")).cast("long")
     wv = Window.partitionBy(g).orderBy(v)
@@ -603,9 +596,6 @@ def referential_integrity_report(edges: list) -> DataFrame:
     )
 
 
-_retire_trend_caches = make_cache_registry()
-
-
 def volume_trend_anomalies(
     df: DataFrame,
     ts_col: str = "ts",
@@ -644,12 +634,11 @@ def volume_trend_anomalies(
 
     kc = float(k) * float(scale)
     half = int(window) // 2
-    days = (
-        df.groupBy(F.to_date(F.col(ts_col)).alias("day"))
-        .agg(F.count("*").cast("long").alias("n_events"))
-        .persist()
+    days = persist(
+        df.groupBy(F.to_date(F.col(ts_col)).alias("day")).agg(
+            F.count("*").cast("long").alias("n_events")
+        )
     )
-    _retire_trend_caches([days])
     # Dense calendar spine: a day with ZERO events never reaches the
     # groupBy output, yet a total outage is the strongest instance of the
     # failure class this monitor exists for (r12 review) — and without
@@ -696,9 +685,6 @@ def volume_trend_anomalies(
     )
 
 
-_retire_conc_caches = make_cache_registry()
-
-
 def user_concentration_report(df: DataFrame, key_col: str = "user_id") -> DataFrame:
     """Event-concentration audit over a key (defaults: events per user) —
     the bot/power-user screen run before per-user statistics are trusted:
@@ -730,12 +716,9 @@ def user_concentration_report(df: DataFrame, key_col: str = "user_id") -> DataFr
     # and the rank join-back) — uncached that re-runs the corpus-wide
     # count aggregate, so the thin (key, count) relation is persisted
     # (r12 plan walk: 2 scans + 2 count shuffles in the first cut).
-    counts = (
-        df.groupBy(F.col(key_col))
-        .agg(F.count("*").cast("long").alias("_ne"))
-        .persist()
+    counts = persist(
+        df.groupBy(F.col(key_col)).agg(F.count("*").cast("long").alias("_ne"))
     )
-    _retire_conc_caches([counts])
     ranked = exact_global_rank(
         counts, ["_ne", key_col], rank_col="_rk", n_col="_n"
     )
@@ -865,9 +848,6 @@ def reconciliation_report(
     )
 
 
-_retire_benford_caches = make_cache_registry()
-
-
 def benford_first_digit_report(
     df: DataFrame, amount_col: str, flag_threshold: float = 0.04
 ) -> DataFrame:
@@ -914,8 +894,7 @@ def benford_first_digit_report(
     ).groupBy("digit").agg(F.count("*").cast("long").alias("_n"))
     # the 9-row counts relation feeds both the spine join and the total —
     # uncached, the total's re-aggregation would re-scan the corpus
-    counts = counts.persist()
-    _retire_benford_caches([counts])
+    counts = persist(counts)
     total = counts.agg(F.sum("_n").cast("long").alias("_tot"))
     spine = df.sparkSession.range(1, 10).select(
         F.col("id").cast("int").alias("digit")

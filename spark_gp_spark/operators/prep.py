@@ -23,26 +23,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .cache import make_cache_registry
+from .cache import persist
 from .hashing import h32
 from .text import bpe_token_count, tokens, word_ngrams_of
 
 #: hash-bucket split boundaries (out of 100): [0, TRAIN) train,
 #: [TRAIN, TRAIN+VAL) val, rest test.
 SPLIT_TRAIN, SPLIT_VAL = 80, 10
-
-#: persisted (id, group, n_tokens, hash, bucket) projection of the LAST
-#: token_budget_fill call — it feeds both the offsets aggregate and the
-#: main join, so without a persist the regex token count runs twice per
-#: invocation; each call retires the previous call's (operators/cache.py).
-_retire_tbf_caches = make_cache_registry()
-
-
-#: persisted (id, split, shingles) projection of the LAST
-#: split_leakage_check call — it feeds the train-distinct side, the test
-#: posting side, AND the per-test-doc totals, so without a persist the
-#: corpus-wide tokenize+shingle chain runs three times per invocation.
-_retire_leakage_caches = make_cache_registry()
 
 
 def split_expr(
@@ -337,14 +324,15 @@ def split_leakage_check(
     # re-runs the whitespace split per element), and PERSIST it: three
     # consumers below (train distinct, test postings, test totals) would
     # otherwise each replay the corpus-wide tokenize+shingle chain
-    base = df.select(
-        F.col(id_col),
-        split_expr(id_col, train, val).alias("_split"),
-        tokens(F.col(text_col)).alias("_t"),
-    ).select(
-        id_col, "_split", word_ngrams_of(F.col("_t"), shingle_n).alias("_sh")
-    ).persist()
-    _retire_leakage_caches([base])
+    base = persist(
+        df.select(
+            F.col(id_col),
+            split_expr(id_col, train, val).alias("_split"),
+            tokens(F.col(text_col)).alias("_t"),
+        ).select(
+            id_col, "_split", word_ngrams_of(F.col("_t"), shingle_n).alias("_sh")
+        )
+    )
     test_docs = base.filter(F.col("_split") == "test")
     train_post = (
         base.filter(F.col("_split") == "train")
@@ -459,21 +447,21 @@ def _hash_order_prefix(
     plus the running total over all hash-earlier rows of its group — the
     bucketed distributed prefix sum shared by token_budget_fill and
     pack_sequences (see token_budget_fill's docstring for why this is NOT
-    one window per group).  The 5-column projection is persisted (it feeds
-    both the offsets aggregate and the main join) and retired by the
-    next call (_retire_tbf_caches)."""
+    one window per group).  The 5-column projection is persisted: it feeds
+    both the offsets aggregate and the main join."""
     from .hashing import MERSENNE_P
     from .text import token_count
 
     hv = h32(F.concat(F.lit(seed_prefix), F.col(id_col).cast("string")))
-    base = df.select(
-        F.col(id_col),
-        group_expr,
-        token_count(F.col(text_col)).cast("long").alias("n_tokens"),
-        hv.alias("_h"),
-        F.floor(hv * F.lit(buckets) / F.lit(MERSENNE_P)).alias("_b"),
-    ).persist()
-    _retire_tbf_caches([base])
+    base = persist(
+        df.select(
+            F.col(id_col),
+            group_expr,
+            token_count(F.col(text_col)).cast("long").alias("n_tokens"),
+            hv.alias("_h"),
+            F.floor(hv * F.lit(buckets) / F.lit(MERSENNE_P)).alias("_b"),
+        )
+    )
     gname = base.columns[1]
     offw = (
         Window.partitionBy(gname)
@@ -757,10 +745,6 @@ def stratified_split(
     )
 
 
-#: persisted cells relation of the LAST split_balance_report call.
-_retire_balance_caches = make_cache_registry()
-
-
 def split_balance_report(
     assigned: DataFrame,
     split_col: str = "split",
@@ -790,12 +774,11 @@ def split_balance_report(
     the join back), so it is persisted — uncached, the corpus-wide count
     aggregate would re-run per consumer (the r12 wave-4 plan lock caught
     exactly that: three parquet scans in the first cut)."""
-    cells = (
-        assigned.groupBy(F.col(split_col), F.col(stratum_col))
-        .agg(F.count("*").cast("long").alias("_n"))
-        .persist()
+    cells = persist(
+        assigned.groupBy(F.col(split_col), F.col(stratum_col)).agg(
+            F.count("*").cast("long").alias("_n")
+        )
     )
-    _retire_balance_caches([cells])
     splits = cells.select(split_col).distinct()
     strata = cells.select(stratum_col).distinct()
     full = (

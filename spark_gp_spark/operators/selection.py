@@ -28,16 +28,11 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .cache import make_cache_registry
+from .cache import persist
 from .hashing import h32
 from .ivf import _sq_dists
 from .similarity import norm, paired_cosine
 from .text import tokens
-
-#: live cache of the last semdedup assigned relation: each call retires the
-#: previous call's entry (operators/cache.py).
-_retire_assign_caches = make_cache_registry()
-
 
 def _assigned_with_order(
     emb: DataFrame, centroids: np.ndarray, id_col: str, vec_col: str
@@ -84,13 +79,12 @@ def semdedup(
     candidate count is Σ|cell|² — at 100 TB you size the centroid count so
     cells hold ~10⁴ rows each, exactly like the paper's 100k-cluster runs.
     The window and the join share the hash-partitioning on ``cell``.  The
-    assigned relation feeds both join sides, so it is persisted (previous
-    invocation's cache retired) — without it the Arrow-batched distance UDF
-    and the cell window would run twice; at past-cluster-memory scale swap
-    the persist for a checkpoint to cell-partitioned parquet.
+    assigned relation feeds both join sides, so it is persisted — without
+    it the Arrow-batched distance UDF and the cell window would run twice;
+    at past-cluster-memory scale swap the persist for a checkpoint to
+    cell-partitioned parquet.
     """
-    a = _assigned_with_order(emb, centroids, id_col, vec_col).persist()
-    _retire_assign_caches([a])
+    a = persist(_assigned_with_order(emb, centroids, id_col, vec_col))
     left = a.select(
         F.col("_id"), F.col("_v"), F.col("_n"), F.col("cell"), F.col("ord")
     )
@@ -318,22 +312,22 @@ def cluster_balance_sample(
     and a broadcast join of the thresholds back onto the thin (id, cell)
     relation — the embedding payload itself never moves.  The assigned
     relation feeds BOTH the count and the keep-predicate join, so it is
-    persisted (previous invocation's entry retired, shared discipline with
-    ``semdedup``) — without it the Arrow distance UDF would run twice over
-    the corpus; at past-cluster-memory scale swap the persist for a
-    checkpoint to parquet, exactly the encode-once trade the ANN codes
-    relation makes."""
+    persisted (as in ``semdedup``) — without it the Arrow distance UDF
+    would run twice over the corpus; at past-cluster-memory scale swap the
+    persist for a checkpoint to parquet, exactly the encode-once trade the
+    ANN codes relation makes."""
     from .ivf import ivf_assign_frame
     from .prep import temperature_mix_sample
 
-    assign = ivf_assign_frame(
-        emb,
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>"),
-        np.asarray(centroids, dtype=np.float64),
-        id_col,
-    ).persist()
-    _retire_assign_caches([assign])
+    assign = persist(
+        ivf_assign_frame(
+            emb,
+            F.col(id_col),
+            F.col(vec_col).cast("array<double>"),
+            np.asarray(centroids, dtype=np.float64),
+            id_col,
+        )
+    )
     return temperature_mix_sample(
         assign, group_col="cell", id_col=id_col, alpha=alpha, seed=seed
     )

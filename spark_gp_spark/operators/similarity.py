@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .cache import make_cache_registry
+from .cache import persist
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -693,10 +693,6 @@ def topk_recall(
     )
 
 
-#: per-call-site persisted-relation retirement (operators/cache.py)
-_retire_norm_caches = make_cache_registry()
-
-
 def embedding_norm_outliers(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -714,8 +710,8 @@ def embedding_norm_outliers(
     cases identically.
 
     Scale shape: one codegen'd fold per row for the squared norm into a
-    PERSISTED thin (id, norm) relation (retired via the module cache
-    registry), one global aggregate for (mean, stddev) over it, broadcast
+    PERSISTED thin (id, norm) relation, one global aggregate for
+    (mean, stddev) over it, broadcast
     back — the embedding payload is read once and never shuffled.  (The
     r12 plan audit caught the first cut re-folding the corpus for the
     stats pass; the persist is the fix, asserted in tests/test_plans.py.)"""
@@ -724,8 +720,7 @@ def embedding_norm_outliers(
         F.lit(0.0),
         lambda acc, x: acc + x * x,
     )
-    norms = df.select(F.col(id_col), F.sqrt(sq).alias("_norm")).persist()
-    _retire_norm_caches([norms])
+    norms = persist(df.select(F.col(id_col), F.sqrt(sq).alias("_norm")))
     # Exactness (r13 sweep of the round(avg(double)) fold-order class):
     # mu/sd feed EVERY output row's z, so ulp noise in a double sum would
     # put the whole relation's 6-dp rounding at the mercy of partition

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .cache import make_cache_registry
+from .cache import persist
 
 # Tiny per-language stopword inventories for the n-gram/stopword heuristic.
 # Deliberately small so the DuckDB oracle can restate them inline.
@@ -315,12 +315,9 @@ def token_cooccurrence_pmi(
     # and kept feeds both sides of the pair self-join — uncached, the
     # tokenize + explode + df-aggregate chain re-evaluates ~5× (the pre-fix
     # plan carried 56 Exchange / 20 scan references).  Persist both thin
-    # relations once; the session registry retires them on the next call.
-    dfreq = dfreq.persist()
-    kept = post.join(dfreq.select("tok"), "tok", "left_semi").persist()
-    from .dedup import _retire_shingle_caches
-
-    _retire_shingle_caches([dfreq, kept])
+    # relations once.
+    dfreq = persist(dfreq)
+    kept = persist(post.join(dfreq.select("tok"), "tok", "left_semi"))
     a = kept.select("_id", F.col("tok").alias("tok_a"))
     b = kept.select("_id", F.col("tok").alias("tok_b"))
     co = (
@@ -418,23 +415,18 @@ def dup_ngram_fraction(
     # which CSEs it) each of the n F.get references re-runs the whitespace
     # split per output gram — measured 13.9 s vs 3.3 s for one clean pass at
     # sf0.1.  Same discipline as ngram_jaccard_pairs (dedup.py:197).
-    staged = toks.select(
-        id_col, word_ngrams_of(F.col("_toks"), n).alias("_g")
-    ).persist()
-    pairs = (
+    staged = persist(
+        toks.select(id_col, word_ngrams_of(F.col("_toks"), n).alias("_g"))
+    )
+    # also persisted: pairs feeds BOTH the gram-frequency agg and the join
+    # back, and the branches' partitionings differ, so exchange reuse does
+    # not fire — without this the explode+hash+distinct runs twice.  Thin
+    # (id, hash) rows spill-safely at scale.
+    pairs = persist(
         staged.select(id_col, F.explode("_g").alias("_gram"))
         .select(id_col, h60(F.col("_gram")).alias("_gh"))
         .distinct()
-        # also persisted: pairs feeds BOTH the gram-frequency agg and the
-        # join back, and the branches' partitionings differ, so exchange
-        # reuse does not fire — without this the explode+hash+distinct runs
-        # twice.  Thin (id, hash) rows spill-safely at scale; session-scoped
-        # retirement discipline is dedup.py's.
-        .persist()
     )
-    from .dedup import _retire_shingle_caches
-
-    _retire_shingle_caches([staged, pairs])
     freq = pairs.groupBy("_gh").agg(F.count("*").alias("_df"))
     joined = pairs.join(freq, "_gh")
     dup = (F.col("_df") >= 2).cast("int")
@@ -481,8 +473,7 @@ def tfidf_cosine_pairs(
     Plan: one shuffle for per-doc term counts, one for document
     frequencies, one posting equi-join on the token (id_a < id_b), one
     pair-level sum; norms ride two small joins.  The (doc, token, weight)
-    relation is persisted once and feeds norms + both join sides
-    (session-scoped retirement discipline, dedup.py:_retire_shingle_caches).
+    relation is persisted once and feeds norms + both join sides.
 
     Output: (id_a, id_b, cosine round 6), cosine compared AFTER rounding
     so engine-side last-ulp sum differences cannot flip the threshold.
@@ -499,18 +490,13 @@ def tfidf_cosine_pairs(
     dfreq = tf.groupBy("t").agg(F.count("*").alias("df")).filter(
         F.col("df") <= F.lit(max_df)
     )
-    w = (
-        tf.join(dfreq, "t")
-        .select(
+    w = persist(
+        tf.join(dfreq, "t").select(
             "_id",
             "t",
             (F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df"))).alias("w"),
         )
-        .persist()
     )
-    from .dedup import _retire_shingle_caches
-
-    _retire_shingle_caches([w])
     norm = w.groupBy("_id").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm"))
     a = w.select(F.col("_id").alias("id_a"), "t", F.col("w").alias("wa"))
     b = w.select(F.col("_id").alias("id_b"), "t", F.col("w").alias("wb"))
@@ -568,10 +554,7 @@ def bm25_topk(
     toks = df.select(
         F.col(id_col).alias("_id"), F.explode(tokens(F.col(text_col))).alias("t")
     )
-    tf = toks.groupBy("_id", "t").agg(F.count("*").alias("tf")).persist()
-    from .dedup import _retire_shingle_caches
-
-    _retire_shingle_caches([tf])
+    tf = persist(toks.groupBy("_id", "t").agg(F.count("*").alias("tf")))
     dl = tf.groupBy("_id").agg(F.sum("tf").alias("dl"))
     total_dl = dl.agg(F.sum("dl")).first()[0]
     avgdl = float(total_dl) / float(n_docs)  # exact: integer / integer
@@ -1325,10 +1308,6 @@ def rule_cofail_matrix(flags: DataFrame, rule_cols: list) -> DataFrame:
     )
 
 
-#: per-call-site persisted-relation retirement (operators/cache.py)
-_retire_hh_caches = make_cache_registry()
-
-
 def heavy_hitter_grams(
     df: DataFrame,
     text_col: str = "text",
@@ -1408,10 +1387,9 @@ def heavy_hitter_grams(
             }
         )
 
-    sketch = grams.mapInPandas(
-        _mg_pass, "gram string, cnt long, part_total long"
-    ).persist()
-    _retire_hh_caches([sketch])
+    sketch = persist(
+        grams.mapInPandas(_mg_pass, "gram string, cnt long, part_total long")
+    )
     merged = (
         sketch.filter(F.col("gram").isNotNull())
         .groupBy("gram")

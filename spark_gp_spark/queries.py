@@ -31,6 +31,7 @@ from .operators import asof as A
 from .operators import multimodal as M
 from .operators import prep as P
 from .operators import skew as SK
+from .operators.cache import persist
 from .operators.hashing import (
     MERSENNE_P,
     affine_hash_sql,
@@ -733,8 +734,7 @@ def exact_dedup_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     replacement for the `exact_dedup` registry entry (r10 audit item 7b:
     the natural corpus has no byte-identical texts, so every dup_count was
     1 and the dedup never collapsed anything).  ~26 groups collapse at
-    sf0.01.  STAGED for the round-11 correctness window (the r10 window is
-    exactly full); side-by-side parity pytest in
+    sf0.01.  Side-by-side parity pytest in
     tests/test_leakage_normdedup.py."""
     return D.exact_dedup(_plant_exact_dups(load_table(spark, sf_dir, "documents")))
 
@@ -750,8 +750,7 @@ def dedup_keep_first_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_keep_first over the planted-verbatim-copy fixture — the
     de-vacuated replacement for the `dedup_keep_first` registry entry
     (r10 audit item 7b): the survivor relation is now provably SMALLER
-    than the input (planted copies die; keep-first actually chooses).
-    STAGED for the round-11 correctness window."""
+    than the input (planted copies die; keep-first actually chooses)."""
     out = D.dedup_keep_first(
         _plant_exact_dups(load_table(spark, sf_dir, "documents"))
     )
@@ -777,7 +776,7 @@ def redact_pii_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     classes deterministically: doc_id % 13 = 2 appends a doc-id-unique
     email, doc_id % 13 = 9 appends a 16-digit card number; both engines
     state the identical mutation, and at sf0.01 ~38 emails and ~38 long
-    numbers are redacted.  STAGED for the round-11 correctness window."""
+    numbers are redacted."""
     docs = load_table(spark, sf_dir, "documents")
     planted = docs.withColumn(
         "text",
@@ -1009,8 +1008,7 @@ def band_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation that decides cap/salt/AQE BEFORE a corpus-sized run.
     Non-vacuous: sf0.01's near-dups collide in their bands, so the head of
     the report carries multi-occupant buckets with skew_factor > 1 while
-    the mean bucket is ~singleton.  STAGED for the round-11 correctness
-    window."""
+    the mean bucket is ~singleton."""
     docs = load_table(spark, sf_dir, "documents")
     sigs = D.minhash_signatures(docs)
     banded = sigs.select(
@@ -1152,9 +1150,8 @@ def streaming_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     a ZERO-state stream-static join (left outer + null filter, the
     supported rendering of a stream-static anti join), with keep-first as
     the deterministic batch epilogue over the emitted log.  Same relation
-    as the batch twin, SAME oracle (_DEDUP_INCREMENTAL_SQL).  STAGED for
-    the round-11 correctness window (the r10 window is exactly full);
-    side-by-side parity pytest in tests/test_leakage_normdedup.py."""
+    as the batch twin, SAME oracle (_DEDUP_INCREMENTAL_SQL).
+    Side-by-side parity pytest in tests/test_leakage_normdedup.py."""
     from .streaming.events import run_streaming_ingest_dedup
 
     out = run_streaming_ingest_dedup(
@@ -1230,10 +1227,8 @@ def containment_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     long one (boilerplate/quotes/partial crawls), which symmetric Jaccard
     structurally misses.  Same posting-join plan as ngram_jaccard_pairs.
 
-    Registered in the round-10 window after a staged r9 round: built,
-    oracle SQL below, pytest-gated with a planted subset pair
-    (tests/test_containment_editdist.py) — the r8 incremental-twin
-    precedent (SURVEY round-9 continuity note #2)."""
+    Pytest-gated with a planted subset pair
+    (tests/test_containment_editdist.py)."""
     docs = load_table(spark, sf_dir, "documents")
     return D.containment_pairs(docs, threshold=0.5)
 
@@ -1283,8 +1278,7 @@ def editdist_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     unordered tile-pair cells and generates/verifies the quadratic pair
     set inside the vectorized Myers kernel — the boundary carries
     O(rows·3T) short strings, not O(pairs).  The verb for short-field
-    dedup (titles, names) where shingle sets are too coarse.  Registered
-    in the round-10 window."""
+    dedup (titles, names) where shingle sets are too coarse."""
     docs = load_table(spark, sf_dir, "documents")
     return D.editdist_pairs(
         docs, F.substring(F.col("text"), 1, _EDITDIST_PREFIX),
@@ -1312,8 +1306,7 @@ def corpus_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     Versions: old = doc_id % 7 ≠ 0, new = doc_id % 5 ≠ 0 with docs at
     doc_id % 11 = 0 carrying a ' v2' text suffix (a deterministic mutation
     both engines state, so 'changed' is non-vacuous).  One full-outer
-    equi-join over two narrow (id, md5) projections.  Registered in the
-    round-10 window."""
+    equi-join over two narrow (id, md5) projections."""
     from .operators.merge import snapshot_diff
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1360,7 +1353,7 @@ def incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     successor's text — when that successor is an unchanged-history doc the
     batch row is a verbatim re-crawl of retained content and MUST be
     dropped (the oracle replays the same copy rule; 12 of 88 batch rows
-    die at sf0.01).  Registered in the round-10 window."""
+    die at sf0.01)."""
     from .operators.merge import snapshot_diff
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1389,13 +1382,9 @@ def incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # new is a self-join subtree and diff full-outer-joins it against old;
     # uncached, the batch/history/final branches re-inline BOTH subtrees —
     # the pre-fix plan carried ~100 Exchange nodes / 5 copies of the new
-    # self-join.  Persist each once (the corpus_prep cache discipline; the
-    # next registry query retires them via the session registry).
-    from .operators.dedup import _retire_shingle_caches
-
-    new = new.persist()
-    diff = snapshot_diff(old, new, "doc_id", F.md5("text")).persist()
-    _retire_shingle_caches([new, diff])
+    # self-join.  Persist each once (the corpus_prep cache discipline).
+    new = persist(new)
+    diff = persist(snapshot_diff(old, new, "doc_id", F.md5("text")))
     batch = new.join(
         diff.filter(F.col("status").isin("added", "changed")).select(
             "doc_id", "status"
@@ -1457,8 +1446,7 @@ def streaming_trending_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators end to end (watermarked append windowed count into a parquet
     sink of CLOSED windows, one batch row_number for the top-k).  Oracle =
     integer window arithmetic on ts(doc) = epoch + doc_id with the same
-    closed-window cutoff predicate as streaming_window_counts_append.
-    Registered in the round-10 window."""
+    closed-window cutoff predicate as streaming_window_counts_append."""
     from .streaming.events import run_streaming_trending_terms
 
     return run_streaming_trending_terms(spark, sf_dir)
@@ -1499,8 +1487,7 @@ def streaming_neardup_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pays them over 8 stores plus row retention.  The custom-state design
     stands vindicated on both footprint and wall clock; this twin is kept
     as the parity-proven JVM alternative and the honest record of the
-    experiment.  Same emitted relation, SAME oracle (_STREAM_NEARDUP_SQL).
-    Registered in the round-10 window."""
+    experiment.  Same emitted relation, SAME oracle (_STREAM_NEARDUP_SQL)."""
     from .streaming.neardup import run_streaming_neardup_join
 
     return run_streaming_neardup_join(spark, sf_dir)
@@ -1785,7 +1772,7 @@ def neardup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold before committing a corpus-sized run.  Non-vacuous: at
     sf0.01 the grid steps through five distinct (n_pairs, n_docs) levels —
     a real elbow from the incidental-overlap floor down to the 25-pair
-    near-dup band.  STAGED for the round-11 correctness window."""
+    near-dup band."""
     return D.neardup_threshold_sweep(
         load_table(spark, sf_dir, "documents"), thresholds=_SWEEP_GRID
     )
@@ -1822,8 +1809,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     2-column projection, never the text.  Non-vacuous: sf0.01's 25
     near-dup pairs spread over 23 distinct source cells, 22 of them
     off-diagonal — cross-source copying dominates, exactly what the
-    diagnostic exists to reveal.  STAGED for the round-11 correctness
-    window."""
+    diagnostic exists to reveal."""
     return D.source_overlap_matrix(
         load_table(spark, sf_dir, "documents"), threshold=0.5
     )
@@ -1890,8 +1876,7 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     boilerplate) at a glance.  Composes the registered neardup_components
     verbatim, so parity inherits its proven CC determinism; one bounded
     aggregate on top.  Non-vacuous at sf0.01: 453 singletons, 22 pairs,
-    one triple — three genuinely distinct size classes.  STAGED for the
-    round-12 window."""
+    one triple — three genuinely distinct size classes."""
     comps = neardup_components(spark, sf_dir)
     return D.component_size_histogram(comps)
 
@@ -2082,7 +2067,7 @@ def corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         → leakage-safe hash split (train/val/test)
         → per-split token-budget batch packing.
 
-    This gates operator COMPOSITION — staging/cache-retirement across
+    This gates operator COMPOSITION — staging/caching across
     operators, key co-partitioning between stages — not just the operators
     (each is separately oracle-green).  Scale shape: the corpus relation is
     persisted ONCE and feeds clustering, quality, contamination, and
@@ -2099,10 +2084,8 @@ def corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: one row per surviving canonical doc
     (doc_id, component, component_size, quality, split, n_tokens, batch_id).
     """
-    from .operators.dedup import _retire_shingle_caches
-
     docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") >= _PIPE_PROBE_MAX).persist()
+    corpus = persist(docs.filter(F.col("doc_id") >= _PIPE_PROBE_MAX))
     probe = docs.filter(F.col("doc_id") < _PIPE_PROBE_MAX)
     # stage 1-2: cluster + pick the best member per component
     comps = D.neardup_components(corpus, threshold=0.5)
@@ -2127,7 +2110,7 @@ def corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # PERSISTED: it feeds both the packing input and the final join, and
     # without the cache each reference re-runs the contamination chain
     # (plan-asserted: the probe relation is scanned exactly once)
-    kept = kept.withColumn("split", P.split_expr("doc_id")).persist()
+    kept = persist(kept.withColumn("split", P.split_expr("doc_id")))
     # stage 5: pack each split independently (shard = split; the window
     # partitions by it, so no Exchange SinglePartition)
     packed = P.pack_batches(
@@ -2135,12 +2118,6 @@ def corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         budget=_PIPE_BUDGET,
         shard_col="split",
     )
-    # comps/pairs were materialized eagerly (localCheckpoint) during
-    # clustering, so the shingle caches are spent; hand the session cache
-    # registry the corpus + kept relations instead — the final plan's
-    # quality/contamination/packing branches all read them, and the NEXT
-    # registry query retires them.
-    _retire_shingle_caches([corpus, kept])
     return (
         kept.join(packed.select("doc_id", "n_tokens", "batch_id"), "doc_id")
         .select(
@@ -2188,7 +2165,7 @@ def _gpc_quality_filter_frames(
 
     if corpus is None:
         docs = load_table(spark, sf_dir, "documents")
-        corpus = docs.filter(F.col("doc_id") >= _PIPE_PROBE_MAX).persist()
+        corpus = persist(docs.filter(F.col("doc_id") >= _PIPE_PROBE_MAX))
         probe = docs.filter(F.col("doc_id") < _PIPE_PROBE_MAX)
     _t = _time.perf_counter()
     # ONE staged projection carries every feature: text_stats already
@@ -2262,11 +2239,13 @@ def _gpc_quality_filter_frames(
     # the quality gate downstream — uncached, each reference would re-run
     # the whole text-stats + transform chain over the corpus
     _t = _time.perf_counter()
-    scored = model.transform(feats).select(
-        "doc_id",
-        "quality",
-        F.element_at(vector_to_array("probability"), 2).alias("p1"),
-    ).persist()
+    scored = persist(
+        model.transform(feats).select(
+            "doc_id",
+            "quality",
+            F.element_at(vector_to_array("probability"), 2).alias("p1"),
+        )
+    )
     scored.count()
     _log_stage(
         "gpc_capstone", "plan_build", _time.perf_counter() - _t,
@@ -2294,7 +2273,6 @@ def corpus_prep_gpc_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirrors corpus_prep_pipeline with the model probability attached."""
     import time as _time
 
-    from .operators.dedup import _retire_shingle_caches
     from .operators.ivf import _log_stage
 
     # Stage order: the contamination scan is independent of the model and
@@ -2311,12 +2289,11 @@ def corpus_prep_gpc_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 0.85 s on this scan; plan-locked in tests/test_plans.py), so the
     # ordering is plain cache hygiene, no longer load-bearing.
     docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") >= _PIPE_PROBE_MAX).persist()
+    corpus = persist(docs.filter(F.col("doc_id") >= _PIPE_PROBE_MAX))
     probe = docs.filter(F.col("doc_id") < _PIPE_PROBE_MAX)
     _t = _time.perf_counter()
-    contaminated = (
-        P.contamination_check(corpus, probe, shingle_n=8)
-        .select("doc_id").distinct().persist()
+    contaminated = persist(
+        P.contamination_check(corpus, probe, shingle_n=8).select("doc_id").distinct()
     )
     contaminated.count()
     _log_stage(
@@ -2340,7 +2317,7 @@ def corpus_prep_gpc_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # that point both consumers would compute the canonical-window chain
     # independently; the eager count fills the cache first
     _t = _time.perf_counter()
-    kept = kept.withColumn("split", P.split_expr("doc_id")).persist()
+    kept = persist(kept.withColumn("split", P.split_expr("doc_id")))
     kept.count()
     _log_stage(
         "gpc_capstone", "plan_build", _time.perf_counter() - _t,
@@ -2351,7 +2328,6 @@ def corpus_prep_gpc_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         budget=_PIPE_BUDGET,
         shard_col="split",
     )
-    _retire_shingle_caches([corpus, kept, scored, contaminated])
     return (
         kept.join(packed.select("doc_id", "n_tokens", "batch_id"), "doc_id")
         .select(
@@ -2462,12 +2438,10 @@ def corpus_prep_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, component, component_size, quality, lang, thresh_bp, split,
     n_tokens, batch_id) — thresh_bp is the group's mixing threshold, the
     audit column for WHY a doc survived the rebalance."""
-    from .operators.dedup import _retire_shingle_caches
-
     docs = load_table(spark, sf_dir, "documents")
-    corpus = T.gopher_filter(
-        docs.filter(F.col("doc_id") >= _PIPE_PROBE_MAX), min_tokens=20
-    ).persist()
+    corpus = persist(
+        T.gopher_filter(docs.filter(F.col("doc_id") >= _PIPE_PROBE_MAX), min_tokens=20)
+    )
     probe = docs.filter(F.col("doc_id") < _PIPE_PROBE_MAX)
     comps = D.neardup_components(corpus, threshold=0.5)
     quality = T.text_stats(corpus).select("doc_id", "quality")
@@ -2486,21 +2460,22 @@ def corpus_prep_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-runs the whole canonical-window + contamination-anti-join chain
     # over the corpus (the same re-inlined-subtree class the r13 plan audit
     # fixed in incremental_refresh; v1 has always persisted its kept frame)
-    kept_pre = canonical.filter(F.col("quality") >= _PIPE_QMIN).join(
-        contaminated, "doc_id", "left_anti"
-    ).join(corpus.select("doc_id", "lang"), "doc_id").persist()
+    kept_pre = persist(
+        canonical.filter(F.col("quality") >= _PIPE_QMIN)
+        .join(contaminated, "doc_id", "left_anti")
+        .join(corpus.select("doc_id", "lang"), "doc_id")
+    )
     mixed = P.temperature_mix_sample(kept_pre, group_col="lang")
-    kept = (
-        kept_pre.join(mixed.select("doc_id", "thresh_bp"), "doc_id")
-        .withColumn("split", P.split_expr("doc_id"))
-        .persist()
+    kept = persist(
+        kept_pre.join(mixed.select("doc_id", "thresh_bp"), "doc_id").withColumn(
+            "split", P.split_expr("doc_id")
+        )
     )
     packed = P.pack_batches(
         corpus.join(kept.select("doc_id", "split"), "doc_id"),
         budget=_PIPE_BUDGET,
         shard_col="split",
     )
-    _retire_shingle_caches([corpus, kept_pre, kept])
     return (
         kept.join(packed.select("doc_id", "n_tokens", "batch_id"), "doc_id")
         .select(
@@ -2913,8 +2888,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity inherits their proven determinism (shared quantizer trained from
     the same parquet, identical fold order, 6-dp rounding, id tie-breaks).
     Non-vacuous both ways: at sf0.01 the 20 queries span recall 0.0..1.0
-    (mean 0.57) — the report actually distinguishes good cells from bad.
-    STAGED for the round-11 correctness window."""
+    (mean 0.57) — the report actually distinguishes good cells from bad."""
     exact = cosine_topk(spark, sf_dir)
     approx = ivf_topk(spark, sf_dir)
     return S.topk_recall(approx, exact)
@@ -2992,8 +2966,7 @@ def ann_recall_report_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     auto defaults (cells ≈ √N, nprobe ≈ cells/2): mean recall ≈ 0.9 at
     sf0.01/sf0.1.  Both engines independently derive the exact top-5, the
     auto-IVF top-5 (the oracle re-derives cells/nprobe/sample from the
-    same parquet metadata), and their overlap.  STAGED for the round-12
-    window."""
+    same parquet metadata), and their overlap."""
     exact = cosine_topk(spark, sf_dir)
     approx = ivf_topk_auto(spark, sf_dir)
     return S.topk_recall(approx, exact)
@@ -3568,8 +3541,7 @@ def streaming_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest-drift alarm at arrival time.  All counts are exact integers,
     so cross-batch merge correctness is gated bit-hard by the oracle
     (no float grain to hide in).  Vocab derivation shared with
-    vocab_coverage (operators/text.py:top_df_vocab).  STAGED for the
-    round-11 correctness window."""
+    vocab_coverage (operators/text.py:top_df_vocab)."""
     from .streaming.drift import run_streaming_vocab_drift
 
     return run_streaming_vocab_drift(spark, sf_dir)
@@ -4701,7 +4673,7 @@ def perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rank-based (ntile over the shared 6-dp score, ties on doc_id), so both
     engines derive the identical split.  Non-vacuous by construction: every
     language yields all three buckets (~55/56 docs per (lang, bucket) cell
-    at sf0.01).  STAGED for the round-11 correctness window."""
+    at sf0.01)."""
     return T.perplexity_buckets(
         load_table(spark, sf_dir, "documents"),
         buckets=_LM_BUCKETS,
@@ -4742,8 +4714,7 @@ def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     stop-crawling calls.  Exact integers end to end (first occurrence =
     min doc id), so cross-engine parity is structural.  Non-vacuous: the
     sf0.01 curve decays 2413 → 886 new shingles per decile (cumulative
-    16,245) — a real Heaps shape, not a step.  STAGED for the round-11
-    correctness window."""
+    16,245) — a real Heaps shape, not a step."""
     return T.vocab_growth_curve(load_table(spark, sf_dir, "documents"))
 
 
@@ -4776,8 +4747,7 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrences.  Integer sums + one exactly-rounded division per row, so
     parity is structural; slices rank via exact_ntile (no single-task
     sort).  Non-vacuous: the sf0.01 rates decay across deciles (first
-    slice ≈ 1.0 by construction, later slices measurably lower).  STAGED
-    for the round-12 window."""
+    slice ≈ 1.0 by construction, later slices measurably lower)."""
     return T.ngram_novelty(load_table(spark, sf_dir, "documents"))
 
 
@@ -4815,10 +4785,8 @@ def vocab_coverage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document OOV rate vs the corpus-derived top-16 document-frequency
     vocab (operators/text.py:vocab_coverage) — the tokenizer-fit /
     ingest-drift diagnostic.  Vocab ties break by token string, so both
-    engines derive the identical set.  STAGED for the round-11 correctness
-    window (the r10 window is exactly full with the mandated rotation);
-    built, oracle SQL below, pytest side-by-side parity in
-    tests/test_leakage_normdedup.py — the r9 staging precedent."""
+    engines derive the identical set.  Side-by-side parity pytest in
+    tests/test_leakage_normdedup.py."""
     return T.vocab_coverage(
         load_table(spark, sf_dir, "documents"), vocab_size=_VOCAB_COVERAGE_K
     )
@@ -4850,8 +4818,7 @@ def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge is picked from when fitting a tokenizer ON this corpus.
     Everything corpus-sized dies at one aggregate over the bigram alphabet
     (≤ |charset|² keys).  Non-vacuous: the top-20 spans distinct counts
-    with real English-bigram structure.  STAGED for the round-11
-    correctness window."""
+    with real English-bigram structure."""
     return T.bpe_merge_candidates(
         load_table(spark, sf_dir, "documents"), k=20
     )
@@ -4956,8 +4923,7 @@ def asof_nearest_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     one — the forward picks are exactly the rows the one-sided backward
     as-of cannot express.  The no-view null branch never fires on this
     fixture (every purchase user has views) — it is unit-gated instead
-    (tests/test_asof.py nearest tests).  Registered in the round-13
-    window."""
+    (tests/test_asof.py nearest tests)."""
     ev = load_table(spark, sf_dir, "events")
     left = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", "value"
@@ -5030,8 +4996,7 @@ def paragraph_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     F-planted): every doc with doc_id % 7 = 1 gains a trailing
     boilerplate paragraph — the r12 staging audit at sf0.01 measures 72
     documents sharing it (n_dup_paras = 1 with their base paragraph
-    unique) against 428 clean documents; both branch classes fire.
-    Registered in the round-13 window."""
+    unique) against 428 clean documents; both branch classes fire."""
     docs = load_table(spark, sf_dir, "documents")
     planted = docs.withColumn(
         "text",
@@ -5079,7 +5044,7 @@ def source_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     a drifted source (FIXTURES.md F-planted): src7's lengths shift +400.
     r12 staging audit at sf0.01: 20 of 190 pairs reject — all 19 src7
     pairs plus one natural borderline pair — and 170 do not; both branch
-    classes fire.  Registered in the round-13 window."""
+    classes fire."""
     from .operators.dq import source_ks_drift as _ks
 
     docs = load_table(spark, sf_dir, "documents").withColumn(
@@ -5133,8 +5098,7 @@ def pii_scan_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     FIXTURES.md F-planted).  r12 staging audit at sf0.01: all 10 (lang,
     class) cells carry nonzero counts (the plants are doc_id-keyed, so
     every language slice receives both classes) while ~85% of documents
-    contribute zero hits — both the hit and no-hit regex branches fire.
-    Registered in the round-13 window."""
+    contribute zero hits — both the hit and no-hit regex branches fire."""
     docs = load_table(spark, sf_dir, "documents")
     planted = docs.withColumn(
         "text",
@@ -5165,8 +5129,7 @@ def stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     at sf0.01 (r12 staging audit): all three splits populated in every
     one of the 5 languages with EXACT quotas (en: 175 = ceil(218·0.8)),
     while the hash split's per-language train share on the same corpus
-    spans 75.0-83.6% — the fairness gap this verb exists to close.
-    Registered in the round-13 window."""
+    spans 75.0-83.6% — the fairness gap this verb exists to close."""
     from .operators.prep import stratified_split as _ss
 
     return _ss(load_table(spark, sf_dir, "documents"))
@@ -5201,7 +5164,7 @@ def embedding_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (FIXTURES.md F-planted, embeddings section): vectors with
     vec_id % 97 = 3 are scaled 4× — the r12 staging audit measures 6
     planted outliers flagged and 494 clean vectors unflagged at sf0.01;
-    both branch classes fire.  Registered in the round-13 window."""
+    both branch classes fire."""
     from .operators.similarity import embedding_norm_outliers as _eno
 
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -5260,8 +5223,7 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit): 9 of the 23 multi-doc clusters straddle splits under the
     doc-level hash and are repaired here (9 ``migrated`` rows across all
     three split pairs), while all 453 singletons provably keep their
-    doc-level split (component == id ⇒ identical hash).  STAGED for the
-    round-13 window."""
+    doc-level split (component == id ⇒ identical hash)."""
     comps = neardup_components(spark, sf_dir)
     return P.component_split_assign(comps)
 
@@ -5302,7 +5264,7 @@ def event_anomaly_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     never raw rows.  Non-vacuous at sf0.01 (r12 staging audit): the
     value column's heavy right tail flags 70–82 anomalies per type
     (rates 0.035–0.041) with ~96% of rows unflagged — both branch
-    classes fire with no plant needed.  Registered in the round-13 window."""
+    classes fire with no plant needed."""
     from .operators.dq import robust_anomaly_screen
 
     ev = load_table(spark, sf_dir, "events")
@@ -5363,8 +5325,7 @@ def referential_integrity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     l_suppkey % 97 = 13 negated, orders.o_custkey % 501 = 17 negated,
     nation.n_regionkey -> -1 when n_nationkey % 7 = 3) while three edges
     stay clean — the r12 staging audit measures orphan rates spanning
-    0.0 through 0.16 (4/25 nations) with both branch classes firing.
-    Registered in the round-13 window."""
+    0.0 through 0.16 (4/25 nations) with both branch classes firing."""
     from .operators.dq import referential_integrity_report as _rir
 
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -5665,8 +5626,7 @@ def price_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-partition prefix counts; no single-task sort), where
     approx_percentile would only estimate.  quantile(p) = value at rank
     ceil(p·N) under ORDER BY (price, orderkey, linenumber); the oracle
-    restates the identical row_number arithmetic, so parity is structural.
-    STAGED for the round-12 window."""
+    restates the identical row_number arithmetic, so parity is structural."""
     from .operators.dq import exact_quantiles
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -5697,7 +5657,7 @@ def event_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     work, so this is the canonical one-shuffle-per-group-key Spark shape
     (the repartitionByRange exact-rank machinery is the UNGROUPED
     problem's tool); the oracle restates the same per-group row_number
-    arithmetic.  STAGED for the round-12 window."""
+    arithmetic."""
     from .operators.dq import grouped_exact_quantiles
 
     ev = load_table(spark, sf_dir, "events")
@@ -5728,8 +5688,7 @@ def metadata_integrity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     vacuous pass, the r10 audit lesson), so the fixture plants a
     deterministic drift both engines restate: docs at doc_id % 29 == 7
     carry n_chars + (doc_id % 5) + 1 (17 rows corrupt at sf0.01, drift
-    1..5, spread over 17 of 20 sources).  STAGED for the round-12
-    window."""
+    1..5, spread over 17 of 20 sources)."""
     from .operators.dq import column_integrity_report
 
     docs = load_table(spark, sf_dir, "documents")
@@ -6640,8 +6599,7 @@ def streaming_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     the latest-view pick as a batch max(struct) epilogue over the sink
     log.  Oracle = the same bounded as-of stated with one window.
     Non-vacuous: ~38 of 1981 purchases carry an in-window view at sf0.01
-    (measured in the r11 join-shaped audit).  STAGED for the round-12
-    window."""
+    (measured in the r11 join-shaped audit)."""
     from .streaming.events import run_streaming_asof_enrich
 
     return run_streaming_asof_enrich(spark, sf_dir)
@@ -7053,7 +7011,7 @@ def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     price as its exact double (CSV's text layer would otherwise invite
     locale/precision drift); the per-status aggregate hash-matches the
     oracle computed on the ORIGINAL parquet, proving the round trip, not
-    just the write.  STAGED for the round-12 window."""
+    just the write."""
     o = load_table(spark, sf_dir, "orders")
     source = f"{sf_dir}/orders.parquet"
     path, fresh = _derived_copy_path("csv", source)
@@ -7180,8 +7138,7 @@ def multimodal_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-hosted-copy class the verb exists for (the dedup_normalized
     precedent): every doc with doc_id % 23 = 5 whose successor exists
     carries the successor's payload VERBATIM — ~21 byte-dup groups at
-    sf0.01, stated identically by both engines.  STAGED for the round-11
-    correctness window (r10 window exactly full); parity pytest in
+    sf0.01, stated identically by both engines.  Parity pytest in
     tests/test_leakage_normdedup.py."""
     docs = load_table(spark, sf_dir, "documents")
     mutated = _plant_successor_copies(
@@ -7447,7 +7404,7 @@ def quality_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     float-summation-order drift between engines.  Non-vacuous: at sf0.01
     keep_rate climbs 0.00 (decile 1) → 0.46 → 0.74, then plateaus at
     0.86-1.0 above decile 4 — a real calibration curve with a knee, not a
-    flat line.  STAGED for the round-11 correctness window."""
+    flat line."""
     return T.quality_calibration_bins(
         load_table(spark, sf_dir, "documents"), min_tokens=20
     )
@@ -7514,8 +7471,7 @@ def rule_cofail_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens — FIXTURES.md F-planted): the r12 staging audit measures 12 of
     28 cells nonzero across five count levels, including the
     symbol/alpha_word/mwl cluster co-failing on exactly the planted docs
-    — the redundant-rule signature this matrix exists to expose.  STAGED
-    for the round-13 window."""
+    — the redundant-rule signature this matrix exists to expose."""
     docs = load_table(spark, sf_dir, "documents")
     planted = docs.withColumn(
         "text",
@@ -7567,8 +7523,7 @@ def streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle states.  Non-vacuous on the natural corpus (r12 staging audit
     at sf0.01): the gate rejects 121 of 500 documents with per-source
     keep rates spanning 0.56-0.88 across all 20 sources — both gate
-    branches fire in every source without a plant.  STAGED for the
-    round-13 window."""
+    branches fire in every source without a plant."""
     from .streaming.events import run_streaming_quality_gate
 
     return run_streaming_quality_gate(spark, sf_dir)
@@ -7605,7 +7560,7 @@ def heavy_hitter_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     production boilerplate screen lives in); the verify pruning fires at
     both.  The sketch compress branch cannot fire at bench scale
     (per-partition distinct < k) and is forced with tiny k in the
-    property gate instead.  Registered in the round-13 window."""
+    property gate instead."""
     docs = load_table(spark, sf_dir, "documents")
     planted = docs.withColumn(
         "text",
@@ -7650,7 +7605,7 @@ def event_volume_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     2024-01-15 (its events unioned twice) and an OUTAGE on 2024-01-22
     (odd event_ids dropped).  r12 staging audit at sf0.01: exactly the
     two planted days flag (+251.9 / −139.3 residuals) and the 28 clean
-    days pass.  Registered in the round-13 window."""
+    days pass."""
     from .operators.dq import volume_trend_anomalies
 
     ev = load_table(spark, sf_dir, "events")
@@ -7725,7 +7680,7 @@ def user_concentration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     < 2, ~8.7%, reassigned to user 1): r12 staging audit reads gini
     0.156 / top1pct_share 0.1013 at sf0.01 (7.5× uniform) and 0.1534 /
     0.0992 at sf0.1 — the concentration signature the audit exists to
-    surface.  Registered in the round-13 window."""
+    surface."""
     from .operators.dq import user_concentration_report as _ucr
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -7778,8 +7733,7 @@ def order_reconciliation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     branches fire NATURALLY at every SF (sf0.01: 257 detail-less orders,
     109 within 1%, 2932 within 25%, 11702 beyond — scale-stable shares,
     no plant needed).  Detail side collapses to (orderkey, sum) map-side
-    BEFORE the join; scans prune to 4 + 3 columns.
-    Registered in the round-13 window."""
+    BEFORE the join; scans prune to 4 + 3 columns."""
     from .operators.dq import reconciliation_report as _rec
 
     orders = load_table(spark, sf_dir, "orders")
@@ -7846,8 +7800,7 @@ def benford_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     digits flag and THREE pass at every SF — both branches fire naturally,
     with ≥ 0.004 margin to the threshold on the closest digit (d6/d7),
     stable because the shares are distribution properties, not counts.
-    One pruned scan + 9-group aggregate + two broadcast attaches.
-    Registered in the round-13 window."""
+    One pruned scan + 9-group aggregate + two broadcast attaches."""
     from .operators.dq import benford_first_digit_report as _ben
 
     return _ben(load_table(spark, sf_dir, "orders"), "o_totalprice")
@@ -7892,8 +7845,7 @@ def lang_mislabel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     an und column).  The lang tag rides text_stats's id_col pass-through,
     so the whole matrix is the staged single-tokenization projection plus
     one bounded groupBy — no doc_id join-back; the share window runs on
-    the grouped |langs|×|preds| cells, never the corpus.
-    Registered in the round-13 window."""
+    the grouped |langs|×|preds| cells, never the corpus."""
     return T.lang_mislabel_matrix(load_table(spark, sf_dir, "documents"))
 
 
@@ -8045,8 +7997,7 @@ def storage_layout_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     table's listing overhead eats the cluster.  The 128 cap is a
     bench-corpus calibration (production caps sit in the millions);
     both small_files classes fire naturally at every SF (sf0.01: the
-    purchase/view remainders 61/62 flag, click/error/signup 86-97 pass).
-    Registered in the round-13 window."""
+    purchase/view remainders 61/62 flag, click/error/signup 86-97 pass)."""
     from .sources.sinks import (
         storage_layout_report as _slr,
         write_layout_controlled,
@@ -8103,8 +8054,7 @@ def split_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     splits × observed strata), the (train, zh) overweight gap +0.032 is
     scale-invariant, and 5-7 cells stay unflagged at every SF, so both
     branches fire deterministically (the hash is a pure function of
-    doc_id — per-SF values are fixed, not sampled).
-    Registered in the round-13 window."""
+    doc_id — per-SF values are fixed, not sampled)."""
     from .operators.hashing import h32
     from .operators.prep import split_balance_report as _sbr
 
@@ -8182,8 +8132,7 @@ def csv_ingest_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     writer+reader honor Spark's documented PERMISSIVE semantics
     end-to-end.  All classes fire at every SF (~n/307, n/211, n/401
     rows; sf0.001's 1500 orders still land 4/7/3).  One derived write
-    per process; the audit itself is one scan + bounded aggregate.
-    Registered in the round-13 window."""
+    per process; the audit itself is one scan + bounded aggregate."""
     o = load_table(spark, sf_dir, "orders")
     source = f"{sf_dir}/orders.parquet"
     path, fresh = _derived_copy_path("ingestq", source)
@@ -8278,8 +8227,7 @@ def jsonl_ingest_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicts all five class counts from the planted moduli over the
     ORIGINAL parquet (it never reads the JSONL), so the hash match
     proves the writer + PERMISSIVE JSON reader contract end-to-end.
-    All classes fire at every SF (~n/313, n/199, n/353, n/433).
-    Registered in the round-13 window."""
+    All classes fire at every SF (~n/313, n/199, n/353, n/433)."""
     o = load_table(spark, sf_dir, "orders")
     source = f"{sf_dir}/orders.parquet"
     path, fresh = _derived_copy_path("ingestjq", source)
@@ -8391,8 +8339,7 @@ def multimodal_resize_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~58/42 truncated/padded at every SF (doc byte lengths 44-577 vs the
     256 target), so both branches fire naturally.  The oracle restates
     truncation and padding in HEX space (DuckDB has no BLOB substring)
-    over the same UTF-8 payload derivation attach_binary uses.
-    Registered in the round-13 window."""
+    over the same UTF-8 payload derivation attach_binary uses."""
     docs = load_table(spark, sf_dir, "documents")
     binary = M.attach_binary(docs)
     orig = binary.select(

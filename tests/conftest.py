@@ -30,3 +30,13 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(autouse=True)
+def _cache_scope():
+    """Each test releases what it persisted.  Session and module fixtures are
+    set up before this one, outside any scope, so their frames stay cached."""
+    from spark_gp_spark.operators.cache import cache_scope
+
+    with cache_scope():
+        yield

@@ -2,7 +2,11 @@
 
 Runs every ``queries()`` entry at the given scale factor and compares it with
 its ``oracle_sql()`` via DuckDB: row count, sorted-by-name schema, and
-order-insensitive value comparison.  Usage:
+order-insensitive value comparison.  Each entry (the Spark query plus its
+``toPandas()``) runs inside its own ``cache_scope()``, so one entry's
+persisted relations are released before the next entry runs.  Each line
+carries ``digest``, an md5 of the entry's normalized rows, to compare runs
+of two versions of the program.  Usage:
 
     python tools/check_correctness.py [sf_dir] [query ...] [--window]
 
@@ -23,6 +27,8 @@ over the other corpus.  Everything non-ANN is scale-generic (r10 measured
 
 from __future__ import annotations
 
+import hashlib
+import os
 import sys
 import time
 import traceback
@@ -30,7 +36,7 @@ import traceback
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -42,6 +48,14 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
             df[c] = df[c].astype(str)
     df = df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
     return df
+
+
+def digest(df: pd.DataFrame) -> str:
+    a = normalize(df)
+    for c in a.columns:
+        if pd.api.types.is_float_dtype(a[c]):
+            a[c] = a[c].round(9)
+    return hashlib.md5(a.to_csv(index=False).encode()).hexdigest()[:12]
 
 
 def compare(name: str, spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame) -> list[str]:
@@ -96,6 +110,8 @@ def main() -> int:
 
     import importlib
     entry = importlib.import_module("__spark_entry__")
+    from spark_gp_spark.operators.cache import cache_scope
+
     queries = entry.queries()
     oracles = entry.oracle_sql()
     if window_only:
@@ -109,13 +125,15 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            spark_pdf = fn(spark, sf_dir).toPandas()
+            with cache_scope():
+                spark_pdf = fn(spark, sf_dir).toPandas()
         except Exception:
             print(f"FAIL {name}: spark query raised\n{traceback.format_exc()}")
             n_fail += 1
             continue
+        rows = f"rows={len(spark_pdf)} digest={digest(spark_pdf)}"
         if name not in oracles:
-            print(f"ok   {name}: rows={len(spark_pdf)} (rows-only, {time.time()-t0:.1f}s)")
+            print(f"ok   {name}: {rows} (rows-only, {time.time()-t0:.1f}s)")
             n_pass += 1
             continue
         try:
@@ -131,7 +149,7 @@ def main() -> int:
                 print(f"     {p}")
             n_fail += 1
         else:
-            print(f"ok   {name}: rows={len(spark_pdf)} match ({time.time()-t0:.1f}s)")
+            print(f"ok   {name}: {rows} match ({time.time()-t0:.1f}s)")
             n_pass += 1
     print(f"\n{n_pass} ok, {n_fail} fail")
     return 1 if n_fail else 0
