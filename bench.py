@@ -250,7 +250,7 @@ def greedy_provider_bench(spark) -> dict:
     the jobs cut is visible next to the RMSE parity."""
     from pyspark.sql import functions as F
 
-    from spark_gp_spark.active_set import greedy_active_set
+    from spark_gp_spark.telemetry import record
 
     df = _synthetic(spark, 10_000).persist()
     df.count()
@@ -261,12 +261,14 @@ def greedy_provider_bench(spark) -> dict:
             .setActiveSetProvider(provider)
             .setActiveSetSize(64)
         )
-        greedy_active_set.last_rounds = 0
         t0 = time.time()
-        model = est.fit(df)
+        with record() as rows:
+            model = est.fit(df)
         out[f"fit_10k_m64_{provider}_sec"] = round(time.time() - t0, 3)
         if provider.startswith("greedy"):
-            out[f"fit_10k_m64_{provider}_rounds"] = greedy_active_set.last_rounds
+            out[f"fit_10k_m64_{provider}_rounds"] = sum(
+                r["rounds"] for r in rows if r["kind"] == "active_set"
+            )
         rmse = (
             model.transform(df)
             .select(F.sqrt(F.avg((F.col("prediction") - F.col("label")) ** 2)))
@@ -368,20 +370,19 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from spark_gp_spark.operators.ivf import ANN_STAGE_LOG
     from spark_gp_spark.queries import QUERIES, REGISTRY
+    from spark_gp_spark.telemetry import record
 
     bench_queries = [name for name, e in REGISTRY.items() if e.bench]
     pandas_family = {
         name for name, e in REGISTRY.items() if e.pandas
     } | set(BENCH_ONLY_PANDAS)
 
-    # The cold cost of the one-time artifact training is not hidden:
-    # ANN_STAGE_LOG captures each train and the payload reports it under
+    # The cold cost of the one-time artifact training is not hidden: the
+    # record captures each train and the payload reports it under
     # stage_times["_warmup_cold_train"], measured on THIS VM.
-    warm_snap = len(ANN_STAGE_LOG)
-    _warm = warm_up(spark, SF_DIR)
-    warmup_cold_train = list(ANN_STAGE_LOG[warm_snap:])
+    with record() as warmup_cold_train:
+        _warm = warm_up(spark, SF_DIR)
 
     # Environment calibration: fixed-work probes reported alongside the
     # timings so per-round numbers can be compared across VMs of different
@@ -439,20 +440,19 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     # Per-entry stage split, recorded by the operators themselves as
-    # they run (operators/ivf.py:ANN_STAGE_LOG): plan_build = eager driver
+    # they run (spark_gp_spark/telemetry.py): plan_build = eager driver
     # work (params, artifact-cache lookup/train, LUT math), train = the
     # artifact-cache rows inside it (cache=hit → 0 when the warm block
     # above did its job), spark_exec = the lazy plan's execution remainder.
     stage_times: dict[str, dict] = {}
     for name in bench_queries:
         fn = QUERIES[name]
-        log_snap = len(ANN_STAGE_LOG)
         t0 = time.time()
-        df = fn(spark, SF_DIR)
-        # force full materialization without driver transfer
-        df.write.format("noop").mode("overwrite").save()
+        with record() as stages:
+            df = fn(spark, SF_DIR)
+            # force full materialization without driver transfer
+            df.write.format("noop").mode("overwrite").save()
         timings[name] = round(time.time() - t0, 3)
-        stages = list(ANN_STAGE_LOG[log_snap:])
         if stages:
             plan_build = sum(r["s"] for r in stages if r["stage"] == "plan_build")
             stage_times[name] = {
@@ -466,12 +466,13 @@ def main() -> None:
                 "spark_exec_s": round(timings[name] - plan_build, 3),
                 "stages": stages,
             }
-        # Isolate queries from each other: staged caches a query builds for
-        # itself are retired by the operators, but partially-retained blocks
-        # accumulate over a 38-query session and inflate later entries
-        # (measured: neardup_components 20.2 s in-suite vs 6.8 s isolated on
-        # the same VM).  Each timing should be the query's own steady-state
-        # cost, so drop all cached blocks between timed queries.
+        # Isolate queries from each other: a query's lazy result keeps the
+        # relations it persisted cached (operators/cache.py: with no
+        # cache_scope open they live until clearCache), and retained blocks
+        # accumulate over the session and inflate later entries (measured:
+        # neardup_components 20.2 s in-suite vs 6.8 s isolated on the same
+        # VM).  Each timing should be the query's own steady-state cost, so
+        # drop all cached blocks between timed queries.
         spark.catalog.clearCache()
 
     # Official-window entries (the first 50 registry keys) OUTSIDE the
@@ -646,68 +647,6 @@ def main() -> None:
             "cross-round reads of those entries should use the raw "
             "timings plus each round's calibration block."
         ),
-        "cost_attribution": {
-            # VERDICT r8 next #5/#6 — measured breakdowns for the two
-            # most-questioned entries (sf0.1, this code):
-            "opq_topk_auto": (
-                "SELF-ATTRIBUTED as of r10 — see stage_times: the "
-                "operators log plan_build (eager driver work: params, "
-                "artifact-cache lookup/train, LUT math) vs spark_exec "
-                "per timed entry ON THIS VM, and the warm block trains "
-                "the auto artifacts outside the timed region exactly "
-                "like the frozen ones always were (the r9 official 11.2s "
-                "was a cold auto-OPQ train the frozen-only warm list "
-                "missed); the one-time cold cost is reported under "
-                "stage_times._warmup_cold_train instead of being "
-                "charged to whichever query runs first"
-            ),
-            "corpus_prep_gpc_filter": (
-                "SELF-ATTRIBUTED as of r12 — see stage_times: the entry "
-                "logs contamination_scan / features_scale_agg / gpc_fit "
-                "(with the optimizer's eval+reduction counts AND "
-                "reduction_wall_s, the wall spent INSIDE the objective "
-                "reductions) / gpc_transform_scored / "
-                "neardup_canonical_kept spans on every run.  The r12 "
-                "root-cause hunt for the r11 official 42.9 s mystery: "
-                "isolated fit ~7-13 s at 61 evals, full-suite fit 68 s "
-                "at the IDENTICAL 61 evals with reduction_wall 61.4 s — "
-                "the same numpy work ran ~9x slower.  Every in-process "
-                "hypothesis FAILED to reproduce it (70-query replica "
-                "suite then capstone: 6.9 s reduction wall; Python GC "
-                "frozen/disabled: flat; GP fit benches first: only "
-                "10.7 s), while the same box's two full closing runs "
-                "25 min apart drifted jvm probe 192->112 ms and total "
-                "368->459 s — i.e. time-varying HOST contention, not "
-                "session state.  The spans turn any future slow reading "
-                "into evidence: flat evals + inflated reduction_wall = "
-                "environment, not algorithm.  Held-out accuracy gate "
-                ">= 0.95 unchanged; r12 also removed the capstone's "
-                "only corpus-wide join (sw_ratio now rides the staged "
-                "text-stats projection, bit-identical features)"
-            ),
-            "streaming_neardup_expiry": (
-                "r9 sharded bucket-map state landed mid-round: "
-                "applyInPandasWithState paid a fixed ~0.9 ms per-GROUP "
-                "Arrow invocation over ~10k near-unique (band,key) buckets "
-                "per micro-batch, so the family cost 21-30 s at sf0.1; "
-                "grouping by crc32(bucket) % 256 shards with a per-bucket "
-                "dict in array state (identical emissions and watermark-"
-                "strict expiry — prune-on-data uses the same eviction "
-                "watermark the per-bucket timeout would) cut expiry 28.7 "
-                "-> 14.9 s and event_ttl 20.9 -> 13.6 s measured back to "
-                "back; the remainder is state-store commit + per-batch "
-                "signature cost.  The JVM stream-stream self-join twin "
-                "(staged, parity-proven) measured 20.5 s — slower than "
-                "even the unsharded machine, so the bounded-state design "
-                "wins on both footprint and wall clock.  NUMERIC split as "
-                "of r10: the entry logs stage_and_start and per-batch "
-                "drain wall times into stage_times on every run (the "
-                "small remainder vs the timed total is the untimed final "
-                "sink read + plan build) — the drains are where "
-                "state-store commit cost lives, so the official VM now "
-                "attributes its own number"
-            ),
-        },
         "value": total,
         "unit": "sec",
         "queries": timings,

@@ -19,6 +19,7 @@ from dataclasses import dataclass
 import numpy as np
 from pyspark.sql import DataFrame
 
+from . import telemetry
 from .experts import Experts, sample_feature_rows
 from .gp_math import expert_gram
 from .kernel import Kernel
@@ -156,11 +157,8 @@ def greedy_active_set(ctx: ActiveSetContext, batch: int = 1) -> np.ndarray:
     redundancy (e.g. two near-identical high-gain points) is not penalized.
     Empirically RMSE-neutral at small B (regression-gated in
     tests/test_gpr_spark.py; bench.py reports the trade next to plain
-    greedy).  Reads ``greedy_active_set.last_rounds`` after a call for the
-    number of selection rounds executed — SINGLE-FIT best-effort telemetry
-    only: it is a mutable function attribute, so concurrent fits in one
-    process (or a provider nested inside another) overwrite each other's
-    counts; nothing in the fit path reads it back (ADVICE r8)."""
+    greedy).  Emits ``telemetry.event("active_set", "greedy", rounds=...)``
+    with the number of selection rounds executed."""
     active = sample_feature_rows(ctx.points, 1, ctx.seed)
     x_opt = ctx.optimal_hyperparameters
     rounds = 0
@@ -235,59 +233,39 @@ def greedy_active_set(ctx: ActiveSetContext, batch: int = 1) -> np.ndarray:
                         break
             return out
 
-        if b == 1:
-            def delta_fn(y, X, _factory=factory, _act=act, _x=x_opt,
-                         _Kinv=Kinv, _inv_pdm=inv_pdm, _mv=magic_vector,
-                         _sigma=sigma, _sigma2=sigma2, _keys=act_keys,
-                         _screen=_screen_top):
-                delta = _seeger_deltas(
-                    y, X, _factory, _act, _x, _Kinv, _inv_pdm, _mv, _sigma, _sigma2
-                )
-                sel = _screen(delta, X, 1, _keys)
-                if not sel:
-                    return float("nan"), X[0]
-                i = sel[0]
-                return float(delta[i]), X[i]
+        def topk_fn(y, X, _b=b, _kw=common, _keys=act_keys,
+                    _screen=_screen_top):
+            delta = _seeger_deltas(
+                y, X, _kw["_factory"], _kw["_act"], _kw["_x"], _kw["_Kinv"],
+                _kw["_inv_pdm"], _kw["_mv"], _kw["_sigma"], _kw["_sigma2"],
+            )
+            sel = _screen(delta, X, _b, _keys)
+            if not sel:
+                return np.empty(0), np.empty((0, X.shape[1]))
+            idx = np.asarray(sel)
+            return delta[idx], X[idx]
 
-            try:
-                _, best_vec = ctx.experts.max_over_experts(delta_fn)
-            except ValueError:
-                # every remaining candidate duplicates an active row: the
-                # data has fewer distinct rows than requested — stop.
-                break
-            new_rows = best_vec[None, :]
-        else:
-            def topk_fn(y, X, _b=b, _kw=common, _keys=act_keys,
-                        _screen=_screen_top):
-                delta = _seeger_deltas(
-                    y, X, _kw["_factory"], _kw["_act"], _kw["_x"], _kw["_Kinv"],
-                    _kw["_inv_pdm"], _kw["_mv"], _kw["_sigma"], _kw["_sigma2"],
-                )
-                sel = _screen(delta, X, _b, _keys)
-                if not sel:
-                    return np.empty(0), np.empty((0, X.shape[1]))
-                idx = np.asarray(sel)
-                return delta[idx], X[idx]
-
-            try:
-                new_rows = ctx.experts.topk_over_experts(topk_fn, b)
-            except ValueError:
-                break
-            # within-batch dedup: keep the first (highest-delta) copy
-            seen = set(act_keys)
-            dedup = []
-            for r in new_rows:
-                key = r.tobytes()
-                if key not in seen:
-                    seen.add(key)
-                    dedup.append(r)
-            if not dedup:
-                break
-            new_rows = np.asarray(dedup, dtype=np.float64)
+        try:
+            new_rows = ctx.experts.topk_over_experts(topk_fn, b)
+        except ValueError:
+            # every remaining candidate duplicates an active row: the
+            # data has fewer distinct rows than requested — stop.
+            break
+        # within-batch dedup: keep the first (highest-delta) copy
+        seen = set(act_keys)
+        dedup = []
+        for r in new_rows:
+            key = r.tobytes()
+            if key not in seen:
+                seen.add(key)
+                dedup.append(r)
+        if not dedup:
+            break
+        new_rows = np.asarray(dedup, dtype=np.float64)
         active = np.vstack([active, new_rows])
         rounds += 1
 
-    greedy_active_set.last_rounds = rounds
+    telemetry.event("active_set", "greedy", rounds=rounds)
     return active
 
 

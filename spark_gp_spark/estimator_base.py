@@ -36,6 +36,7 @@ from pyspark.ml.param.shared import (
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import telemetry
 from .active_set import ActiveSetContext, resolve_provider
 from .experts import Experts, build_experts, normalize_points
 from .gp_math import expert_gram, ppa_solve
@@ -312,6 +313,8 @@ class GaussianProcessEstimatorBase(Estimator, GaussianProcessParams, GPPersisten
         (GaussianProcessClassifier.scala:52-60).  ``aux_len`` extra trailing
         scalars per evaluation (e.g. Newton-iteration counts) are summed
         over experts into ``_fit_stats['aux_total']`` for observability.
+        The counters also go out as one ``telemetry.event("gp_fit",
+        "optimize", reduction_wall_s, ...)`` when the search ends.
         """
         factory = self._effective_kernel_factory()
         probe = factory()
@@ -497,6 +500,12 @@ class GaussianProcessEstimatorBase(Estimator, GaussianProcessParams, GPPersisten
             )
         if explore_iter < max_iter:
             best_s = run(best_s, max_iter)
+        stats = self._fit_stats
+        telemetry.event(
+            "gp_fit", "optimize", stats["reduction_wall_s"],
+            evals=stats["evals"], reductions=stats["reductions"],
+            state_updates=stats["state_updates"], aux_total=stats["aux_total"],
+        )
         return from_search(best_s)
 
     def _projected_process(

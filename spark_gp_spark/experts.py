@@ -181,11 +181,6 @@ class Experts:
         self.update_states(update_fn)
         return self.sum_over_experts_stateful(eval_fn, out_len)
 
-    def max_over_experts(self, fn: "Callable[[np.ndarray, np.ndarray], tuple[float, np.ndarray]]"):
-        """fn returns (score, payload-vector) per expert; global argmax,
-        NaN scores dropped (ActiveSetProvider.scala:130)."""
-        raise NotImplementedError
-
     def topk_over_experts(
         self,
         fn: "Callable[[np.ndarray, np.ndarray], tuple[np.ndarray, np.ndarray]]",
@@ -193,9 +188,10 @@ class Experts:
     ) -> np.ndarray:
         """fn returns (scores (c,), payloads (c, d)) per expert — its own
         top candidates, already capped at k; global merge keeps the k
-        highest-scoring payload rows (ties broken by arrival order).  The
-        batched generalization of ``max_over_experts``: one reduction
-        yields k selections instead of one."""
+        highest-scoring payload rows (ties broken by arrival order), NaN
+        scores dropped (ActiveSetProvider.scala:130); raises ``ValueError``
+        when no expert yields a finite score.  One reduction yields k
+        selections."""
         raise NotImplementedError
 
     def unpersist(self) -> None:
@@ -382,25 +378,6 @@ class DistributedExperts(Experts):
         old.unpersist()
         return result
 
-    def max_over_experts(self, fn):
-        def partial(iterator):
-            best_score, best_payload = -np.inf, None
-            for pdf in iterator:
-                for y, xs, n, d in zip(pdf["y"], pdf["xs"], pdf["n"], pdf["d"]):
-                    yv = np.asarray(y, dtype=np.float64)
-                    X = np.asarray(xs, dtype=np.float64).reshape(int(n), int(d))
-                    score, payload = fn(yv, X)
-                    if not np.isnan(score) and score > best_score:
-                        best_score, best_payload = float(score), payload
-            if best_payload is not None:
-                yield pd.DataFrame({"score": [best_score], "payload": [best_payload]})
-
-        rows = self.frame.mapInPandas(partial, schema="score double, payload array<double>").collect()
-        if not rows:
-            raise ValueError("no expert produced a finite score")
-        best = max(rows, key=lambda r: r["score"])
-        return best["score"], np.asarray(best["payload"], dtype=np.float64)
-
     def topk_over_experts(self, fn, k: int) -> np.ndarray:
         def partial(iterator):
             scores: list[float] = []
@@ -475,16 +452,6 @@ class LocalExperts(Experts):
             np.asarray(fn(y, X, st), dtype=np.float64)
             for (y, X), st in zip(self.chunks, self.states)
         ]
-
-    def max_over_experts(self, fn):
-        best_score, best_payload = -np.inf, None
-        for y, X in self.chunks:
-            score, payload = fn(y, X)
-            if not np.isnan(score) and score > best_score:
-                best_score, best_payload = float(score), payload
-        if best_payload is None:
-            raise ValueError("no expert produced a finite score")
-        return best_score, best_payload
 
     def topk_over_experts(self, fn, k: int) -> np.ndarray:
         scores: list[float] = []

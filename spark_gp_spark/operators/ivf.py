@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import telemetry
 from .similarity import norm, paired_cosine
 
 
@@ -126,28 +127,12 @@ def _file_fingerprint(path: str) -> tuple:
 #: (the same hygiene rule as the derived-copy tracker in queries.py).
 _ANN_ARTIFACT_CACHE: dict[tuple, object] = {}
 
-#: Append-only log of ANN stage wall times, written by the operators as
-#: they run so any measuring harness (bench.py) can attribute an entry's
-#: cost to named stages ON THE VM THAT MEASURED IT (VERDICT r9 next #2:
-#: the official-VM opq/pq auto cost was unexplainable from committed
-#: builder-VM numbers).  Rows: {"kind", "stage", "s", ...}.  Readers
-#: snapshot len() before a timed region and slice afterwards.
-ANN_STAGE_LOG: list[dict] = []
-
-
-def _log_stage(kind: str, stage: str, seconds: float, **extra) -> None:
-    ANN_STAGE_LOG.append(
-        {"kind": kind, "stage": stage, "s": round(seconds, 3), **extra}
-    )
-
 
 def _cached_artifact(key: tuple, builder):
     """Key layout contract: key[0] = builder kind, key[1] = source path,
     key[2] = file fingerprint, key[3:] = params.  On a miss, entries for
     the same (kind, path) with a DIFFERENT fingerprint are dropped first —
     they describe a file that no longer exists in that form."""
-    import time as _time
-
     if key not in _ANN_ARTIFACT_CACHE:
         stale = [
             k for k in _ANN_ARTIFACT_CACHE
@@ -155,13 +140,10 @@ def _cached_artifact(key: tuple, builder):
         ]
         for k in stale:
             del _ANN_ARTIFACT_CACHE[k]
-        t0 = _time.perf_counter()
-        _ANN_ARTIFACT_CACHE[key] = builder()
-        _log_stage(
-            str(key[0]), "train", _time.perf_counter() - t0, cache="miss"
-        )
+        with telemetry.span(str(key[0]), "train", cache="miss"):
+            _ANN_ARTIFACT_CACHE[key] = builder()
     else:
-        _log_stage(str(key[0]), "train", 0.0, cache="hit")
+        telemetry.event(str(key[0]), "train", cache="hit")
     return _ANN_ARTIFACT_CACHE[key]
 
 

@@ -24,6 +24,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import telemetry
 from .operators import dedup as D
 from .operators import similarity as S
 from .operators import text as T
@@ -2159,44 +2160,29 @@ def _gpc_quality_filter_frames(
     from . import GaussianProcessClassifier, RBFKernel, Scalar
     from .scaling import scale_features
 
-    import time as _time
-
-    from .operators.ivf import _log_stage
-
     if corpus is None:
         docs = load_table(spark, sf_dir, "documents")
         corpus = persist(docs.filter(F.col("doc_id") >= _PIPE_PROBE_MAX))
         probe = docs.filter(F.col("doc_id") < _PIPE_PROBE_MAX)
-    _t = _time.perf_counter()
-    # ONE staged projection carries every feature: text_stats already
-    # computes the English stopword count for its quality score, so
-    # include_sw_ratio emits the ratio from the same tokenization instead
-    # of the pre-r12 shape (a second corpus-wide tokenize + a doc_id join
-    # to attach it — the capstone's only corpus-wide join, both gone;
-    # identical expressions, so per-row values are unchanged)
-    stats = T.text_stats(corpus, include_sw_ratio=True)
-    # persist the PRE-scale frame: scale_features runs one agg to bake the
-    # mean/std literals, and the fit's expert collect runs again over the
-    # same relation — uncached, the regex-heavy text-stats chain would
-    # evaluate twice over the corpus
-    raw = stats.select(
-        "doc_id",
-        "quality",
-        F.array(
-            F.log(F.col("n_tokens") + 1.0), "mean_word_len", "alpha_ratio", "sw_ratio"
-        ).alias("features"),
-    ).persist()
-    feats = scale_features(raw)
-    # Stage spans (VERDICT r11 #2): the GPC capstone's official wall time
-    # regressed 2.4× on a VM whose cpu probe matched the builder's, with
-    # stage_times null — the ANN self-attribution never covered this
-    # entry.  Log the same plan_build-kind spans the ANN operators log so
-    # bench.py records a features / fit / transform split measured on the
-    # timing VM; `span` names the phase inside the raw `stages` list.
-    _log_stage(
-        "gpc_capstone", "plan_build", _time.perf_counter() - _t,
-        span="features_scale_agg",
-    )
+    with telemetry.span("gpc_capstone", "plan_build", span="features_scale_agg"):
+        # ONE staged projection carries every feature: text_stats already
+        # computes the English stopword count for its quality score, so
+        # include_sw_ratio emits the ratio from the same tokenization
+        # instead of a second corpus-wide tokenize + a doc_id join to
+        # attach it
+        stats = T.text_stats(corpus, include_sw_ratio=True)
+        # persist the PRE-scale frame: scale_features runs one agg to bake
+        # the mean/std literals, and the fit's expert collect runs again
+        # over the same relation — uncached, the regex-heavy text-stats
+        # chain would evaluate twice over the corpus
+        raw = stats.select(
+            "doc_id",
+            "quality",
+            F.array(
+                F.log(F.col("n_tokens") + 1.0), "mean_word_len", "alpha_ratio", "sw_ratio"
+            ).alias("features"),
+        ).persist()
+        feats = scale_features(raw)
     train = feats.filter(F.pmod("doc_id", 3) == 0).withColumn(
         "label", (F.col("quality") >= _PIPE_QMIN).cast("double")
     )
@@ -2216,41 +2202,21 @@ def _gpc_quality_filter_frames(
         .setMaxIter(10)
         .setMultiStart(1)
     )
-    _t = _time.perf_counter()
-    model = gpc.fit(train)
-    # evals/reductions decide whether a slow fit is MORE optimizer work
-    # (different line-search path on that VM) or the SAME work running
-    # slower — the question the r11 official regression left open
-    _log_stage(
-        "gpc_capstone", "plan_build", _time.perf_counter() - _t,
-        span="gpc_fit",
-        evals=gpc._fit_stats.get("evals"),
-        reductions=gpc._fit_stats.get("reductions"),
-        # wall INSIDE the objective reductions vs the span total: a slow
-        # fit with flat evals and flat reduction_wall is setup/collect; a
-        # slow fit with inflated reduction_wall is the per-expert numpy
-        # itself running slower in suite context
-        reduction_wall_s=round(
-            gpc._fit_stats.get("reduction_wall_s", 0.0), 3
-        ),
-    )
+    with telemetry.span("gpc_capstone", "plan_build", span="gpc_fit"):
+        model = gpc.fit(train)
     # persist + materialize the SCORED relation through the still-cached
     # raw frame before dropping it: scored feeds the canonical window AND
     # the quality gate downstream — uncached, each reference would re-run
     # the whole text-stats + transform chain over the corpus
-    _t = _time.perf_counter()
-    scored = persist(
-        model.transform(feats).select(
-            "doc_id",
-            "quality",
-            F.element_at(vector_to_array("probability"), 2).alias("p1"),
+    with telemetry.span("gpc_capstone", "plan_build", span="gpc_transform_scored"):
+        scored = persist(
+            model.transform(feats).select(
+                "doc_id",
+                "quality",
+                F.element_at(vector_to_array("probability"), 2).alias("p1"),
+            )
         )
-    )
-    scored.count()
-    _log_stage(
-        "gpc_capstone", "plan_build", _time.perf_counter() - _t,
-        span="gpc_transform_scored",
-    )
+        scored.count()
     raw.unpersist()
     return corpus, probe, scored
 
@@ -2271,10 +2237,6 @@ def corpus_prep_gpc_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Iterative ML → rows-only correctness (the model is deterministic for a
     fixed seed, and held-out accuracy ≥ 0.95 is pytest-gated); output
     mirrors corpus_prep_pipeline with the model probability attached."""
-    import time as _time
-
-    from .operators.ivf import _log_stage
-
     # Stage order: the contamination scan is independent of the model and
     # the clustering, so it runs FIRST and its (tiny, distinct doc_id)
     # result is persisted — one evaluation, every later consumer reads the
@@ -2291,15 +2253,11 @@ def corpus_prep_gpc_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     corpus = persist(docs.filter(F.col("doc_id") >= _PIPE_PROBE_MAX))
     probe = docs.filter(F.col("doc_id") < _PIPE_PROBE_MAX)
-    _t = _time.perf_counter()
-    contaminated = persist(
-        P.contamination_check(corpus, probe, shingle_n=8).select("doc_id").distinct()
-    )
-    contaminated.count()
-    _log_stage(
-        "gpc_capstone", "plan_build", _time.perf_counter() - _t,
-        span="contamination_scan",
-    )
+    with telemetry.span("gpc_capstone", "plan_build", span="contamination_scan"):
+        contaminated = persist(
+            P.contamination_check(corpus, probe, shingle_n=8).select("doc_id").distinct()
+        )
+        contaminated.count()
     _, _, scored = _gpc_quality_filter_frames(spark, sf_dir, corpus, probe)
     comps = D.neardup_components(corpus, threshold=0.5)
     w = Window.partitionBy("component").orderBy(F.desc("quality"), F.asc("doc_id"))
@@ -2316,13 +2274,9 @@ def corpus_prep_gpc_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join both consume kept inside ONE action, and with the cache cold at
     # that point both consumers would compute the canonical-window chain
     # independently; the eager count fills the cache first
-    _t = _time.perf_counter()
-    kept = persist(kept.withColumn("split", P.split_expr("doc_id")))
-    kept.count()
-    _log_stage(
-        "gpc_capstone", "plan_build", _time.perf_counter() - _t,
-        span="neardup_canonical_kept",
-    )
+    with telemetry.span("gpc_capstone", "plan_build", span="neardup_canonical_kept"):
+        kept = persist(kept.withColumn("split", P.split_expr("doc_id")))
+        kept.count()
     packed = P.pack_batches(
         corpus.join(kept.select("doc_id", "split"), "doc_id"),
         budget=_PIPE_BUDGET,
@@ -2762,29 +2716,6 @@ def _sql_lsh_buckets(bits: int, tables: int, seed: int, src: str = "e") -> str:
 _IVF_K, _IVF_NPROBE, _IVF_SEED, _IVF_SAMPLE = 16, 4, 5, 4000
 
 
-def _ann_plan_build(kind: str):
-    """Context manager logging the EAGER driver-side portion of an ANN
-    registry entry (param derivation, artifact-cache lookup / train,
-    query-vector read, LUT math, lazy-plan assembly) into
-    operators.ivf.ANN_STAGE_LOG — together with the nested train-stage rows
-    it lets a measuring harness split the entry's wall clock into
-    plan_build vs Spark-execution on the VM THAT MEASURED IT (the official
-    opq/pq auto cost was previously unexplainable from committed
-    builder-VM attributions)."""
-    import contextlib
-    import time
-
-    from .operators.ivf import _log_stage
-
-    @contextlib.contextmanager
-    def _cm():
-        t0 = time.perf_counter()
-        yield
-        _log_stage(kind, "plan_build", time.perf_counter() - t0)
-
-    return _cm()
-
-
 def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-Flat approximate top-k (operators/ivf.py): coarse k-means cells +
     nprobe probing — candidates per query ≈ nprobe·N/n_centroids.  Centroids
@@ -3013,7 +2944,7 @@ def ivf_topk_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.ivf import ivf_topk as _ivf_topk
     from .operators.ivf import train_centroids_from_parquet
 
-    with _ann_plan_build("ivf_topk_auto"):
+    with telemetry.span("ivf_topk_auto", "plan_build"):
         cents = train_centroids_from_parquet(
             f"{sf_dir}/embeddings.parquet", seed=_IVF_SEED
         )
@@ -3493,7 +3424,7 @@ def ivfadc_topk_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_pq_codebooks_residual_from_parquet,
     )
 
-    with _ann_plan_build("ivfadc_topk_auto"):
+    with telemetry.span("ivfadc_topk_auto", "plan_build"):
         path = f"{sf_dir}/embeddings.parquet"
         n = parquet_num_rows(path)
         ivf_p, pq_p = auto_ivf_params(n), auto_pq_params(n)
@@ -3810,7 +3741,7 @@ def pq_topk_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_pq_codebooks_from_parquet,
     )
 
-    with _ann_plan_build("pq_topk_auto"):
+    with telemetry.span("pq_topk_auto", "plan_build"):
         path = f"{sf_dir}/embeddings.parquet"
         pqp = auto_pq_params(parquet_num_rows(path))
         books = train_pq_codebooks_from_parquet(
@@ -4014,7 +3945,7 @@ def opq_topk_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_opq_from_parquet,
     )
 
-    with _ann_plan_build("opq_topk_auto"):
+    with telemetry.span("opq_topk_auto", "plan_build"):
         path = f"{sf_dir}/embeddings.parquet"
         pqp = auto_pq_params(parquet_num_rows(path))
         R, books = train_opq_from_parquet(

@@ -40,8 +40,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import telemetry
 from ..operators.dedup import minhash_band_struct, minhash_staged_cols
 from .events import (
+    _arrive_dir_atomically,
     _drive_append_query,
     _no_nodata_batches,
     _staged_arrivals,
@@ -489,88 +491,69 @@ def run_streaming_neardup_expiry(
     (bucket, batch) max aggregates.  tests/test_streaming_neardup.py
     asserts the emitted relation DIFFERS from the no-TTL oracle on a
     nonempty set (proof the timeout branch fired in the official entry)."""
-    # numeric self-attribution (VERDICT r9 #4): log the harness's
-    # driver-side phases — corpus staging, per-arrival micro-batch drains
-    # (where state-store commit cost lives), sink read — into the shared
-    # stage log so the bench payload splits this entry's wall clock on the
-    # VM that measured it
-    import time as _time
-
-    from ..operators.ivf import _log_stage
-
-    _t0 = _time.perf_counter()
-    work = tempfile.mkdtemp(prefix="gp_stream_neardup_exp_")
-    sink, ckpt = os.path.join(work, "sink"), os.path.join(work, "ckpt")
-    src = os.path.join(work, "src")
-    os.makedirs(src)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    c1, c2, ttl_ms = expiry_plan(int(lo), int(hi))
-    # stage all three id-range batches in ONE partitioned write (a
-    # coalesce(1) per batch would serialize three full corpus scans onto
-    # one task each — measured 3× the staging cost at sf0.1); partitionBy
-    # keeps _b out of the stored files, so arrivals carry the plain doc
-    # schema
-    staged = os.path.join(work, "staged")
-    docs.withColumn(
-        "_b",
-        F.when(F.col("doc_id") <= c1, 1)
-        .when(F.col("doc_id") <= c2, 2)
-        .otherwise(3),
-    ).repartition(3, "_b").write.partitionBy("_b").parquet(staged)
-    arrivals = []
-    for j in (1, 2, 3):
-        d = os.path.join(staged, f"_b={j}")
-        arrivals.append(
-            sorted(
-                os.path.join(d, f)
-                for f in os.listdir(d)
-                if f.endswith(".parquet")
+    with telemetry.span("streaming_neardup_expiry", "stage_and_start"):
+        work = tempfile.mkdtemp(prefix="gp_stream_neardup_exp_")
+        sink, ckpt = os.path.join(work, "sink"), os.path.join(work, "ckpt")
+        src = os.path.join(work, "src")
+        os.makedirs(src)
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
+        c1, c2, ttl_ms = expiry_plan(int(lo), int(hi))
+        # stage all three id-range batches in ONE partitioned write (a
+        # coalesce(1) per batch would serialize three full corpus scans onto
+        # one task each — measured 3× the staging cost at sf0.1); partitionBy
+        # keeps _b out of the stored files, so arrivals carry the plain doc
+        # schema
+        staged = os.path.join(work, "staged")
+        docs.withColumn(
+            "_b",
+            F.when(F.col("doc_id") <= c1, 1)
+            .when(F.col("doc_id") <= c2, 2)
+            .otherwise(3),
+        ).repartition(3, "_b").write.partitionBy("_b").parquet(staged)
+        arrivals = []
+        for j in (1, 2, 3):
+            d = os.path.join(staged, f"_b={j}")
+            arrivals.append(
+                sorted(
+                    os.path.join(d, f)
+                    for f in os.listdir(d)
+                    if f.endswith(".parquet")
+                )
+            )
+        # the source watches the glob <src>/* so each id-range arrival can be
+        # a SUBDIRECTORY renamed in with one atomic syscall — a listing can
+        # never observe a partial or split multi-file arrival (r10 review; the
+        # per-file rename variant still had a between-renames split window)
+        stream = (
+            spark.readStream.schema(docs.schema)
+            .parquet(os.path.join(src, "*"))
+            .withColumn(
+                "_event_ts", F.timestamp_seconds(F.lit(_TS_EPOCH) + F.col("doc_id"))
             )
         )
-    # the source watches the glob <src>/* so each id-range arrival can be
-    # a SUBDIRECTORY renamed in with one atomic syscall — a listing can
-    # never observe a partial or split multi-file arrival (r10 review; the
-    # per-file rename variant still had a between-renames split window)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .parquet(os.path.join(src, "*"))
-        .withColumn(
-            "_event_ts", F.timestamp_seconds(F.lit(_TS_EPOCH) + F.col("doc_id"))
+        matches = streaming_neardup_matches(
+            stream, num_hashes=num_hashes, bands=bands, shingle_n=shingle_n, seed=seed,
+            ttl_ms=ttl_ms, ts_col="_event_ts",
         )
-    )
-    matches = streaming_neardup_matches(
-        stream, num_hashes=num_hashes, bands=bands, shingle_n=shingle_n, seed=seed,
-        ttl_ms=ttl_ms, ts_col="_event_ts",
-    )
-    with _state_partitions(spark):
-        q = (
-            matches.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .queryName(query_name)
-            .start()
-        )
+        with _state_partitions(spark):
+            q = (
+                matches.writeStream.outputMode("append")
+                .format("parquet")
+                .option("path", sink)
+                .option("checkpointLocation", ckpt)
+                .queryName(query_name)
+                .start()
+            )
     # one micro-batch per id-range batch (an arrival may span several part
     # files — stage them in a hidden dir, rename the DIR in atomically,
     # then drain, so the batch boundary stays the CASE cut the session
     # oracle restates, regardless of trigger timing)
-    from .events import _arrive_dir_atomically
-
-    _log_stage(
-        "streaming_neardup_expiry", "stage_and_start", _time.perf_counter() - _t0
-    )
     try:
         for j, paths in enumerate(arrivals):
             _arrive_dir_atomically(src, f"arrival-{j:02d}", paths)
-            _tb = _time.perf_counter()
-            q.processAllAvailable()
-            _log_stage(
-                "streaming_neardup_expiry",
-                f"batch{j}_drain",
-                _time.perf_counter() - _tb,
-            )
+            with telemetry.span("streaming_neardup_expiry", f"batch{j}_drain"):
+                q.processAllAvailable()
     finally:
         q.stop()
     log = spark.read.schema(NEARDUP_OUT_SCHEMA).parquet(sink)

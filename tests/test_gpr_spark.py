@@ -179,7 +179,7 @@ def test_greedy_batch_provider_rmse_parity(spark):
     """The batched greedy selector (B=8) must cut selection rounds ~8x and
     keep RMSE at parity with one-per-round greedy on the same data/config
     (the documented approximation trade, active_set.py:greedy_active_set)."""
-    from spark_gp_spark.active_set import greedy_active_set
+    from spark_gp_spark.telemetry import record
 
     df = synthetics_df(spark, n=300)
 
@@ -194,8 +194,9 @@ def test_greedy_batch_provider_rmse_parity(spark):
             .setSigma2(1e-2)
             .setMaxIter(10)
         )
-        model = gp.fit(df)
-        rounds = greedy_active_set.last_rounds
+        with record() as rows:
+            model = gp.fit(df)
+        (rounds,) = [r["rounds"] for r in rows if r["kind"] == "active_set"]
         rmse = (
             model.transform(df)
             .select(F.sqrt(F.avg((F.col("prediction") - F.col("label")) ** 2)))

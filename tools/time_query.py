@@ -4,7 +4,10 @@ Times individual registry queries with the noop sink (guide §1.4) in a
 fresh session configured exactly like bench.py (same master/shuffle/AQE
 settings), after the same JVM + Python-worker + ANN-artifact warmups, so a
 query's number here is its bench steady-state cost without the other ~95
-entries around it.  Optionally captures .explain("formatted") per query.
+entries around it.  Each rep prints its time followed by the telemetry rows
+the entry recorded (spark_gp_spark/telemetry.py), the same split bench.py
+reports under stage_times.  Optionally captures .explain("formatted") per
+query.
 
 Usage:
     python tools/time_query.py [--sf DIR] [--reps N] [--explain OUTDIR]
@@ -40,6 +43,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     from spark_gp_spark.queries import QUERIES
+    from spark_gp_spark.telemetry import record
 
     needs_ann = not args.no_warm_ann and any(
         any(t in q for t in ("ivf", "pq_", "opq", "lsh", "ann", "semdedup",
@@ -55,9 +59,11 @@ def main() -> None:
         for rep in range(args.reps):
             spark.sparkContext.setJobDescription(f"time_query: {name} rep{rep}")
             t0 = time.time()
-            df = fn(spark, args.sf)
-            df.write.format("noop").mode("overwrite").save()
+            with record() as rows:
+                df = fn(spark, args.sf)
+                df.write.format("noop").mode("overwrite").save()
             times.append(round(time.time() - t0, 3))
+            print(f"{name} rep{rep}: {times[-1]} s {rows}", flush=True)
             spark.catalog.clearCache()
         results[name] = times
         if args.explain:
